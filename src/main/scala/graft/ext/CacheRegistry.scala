@@ -47,7 +47,7 @@ object CacheRegistry {
 
   /** Unpersist and forget ONE checkpointed or pinned DataFrame — for
     * iterative operators that supersede a frontier mid-workload
-    * (Dedup.clusters, kCoreTrajectory's per-round edge generations):
+    * (Dedup.clusters, the per-round generations of Graph.Loop):
     * without eager release, persisted blocks grow O(rounds * corpus)
     * until clearAll. A pin is matched by REFERENCE (the exact DataFrame
     * handed back by [[pin]]); a checkpoint by its backing RDD. A df

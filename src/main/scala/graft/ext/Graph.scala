@@ -18,39 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Fixed-iteration PageRank (damping 0.85) on `edges(src, dst)`.
-    *
-    * Node set = DISTINCT src. Pass a symmetrized edge list for an
-    * undirected graph — that also guarantees every node has out-degree
-    * >= 1, so no dangling-mass redistribution is needed (nodes
-    * appearing only as dst would silently leak rank mass; symmetrize
-    * or pre-filter them).
-    *
-    * Update rule, all BIGINT with truncating division:
-    *   score_0(v)   = scale div N
-    *   score_k+1(v) = (score_0 * 15) div 100
-    *                  + (85 * sum_u->v(score_k(u) div deg(u))) div 100
-    *
-    * Scale shape: edges and per-source degrees are joined ONCE and
-    * checkpointed; each iteration is one equi-join of that frame with
-    * the current scores on src (co-partitioned shuffle, AQE-friendly)
-    * plus a keyed sum on dst — the standard distributed PageRank
-    * round. Scores are locally checkpointed every `checkpointEvery`
-    * rounds (default: every round) with eager release of the previous
-    * frontier, keeping lineage and analysis cost flat on long runs.
-    * Leaving rounds unmaterialized (`checkpointEvery` > iterations)
-    * measured NO faster here and can regress badly: the optimizer sees
-    * small stats for the per-round contribution aggregate and plans
-    * nested broadcast joins whose build sides re-execute the chain —
-    * measured 8x slower on the x169 graph. The only driver traffic is
-    * the node COUNT (one scalar, once).
-    *
-    * With `allNodesReceive = true` the caller asserts every node has
-    * at least one in-edge (always true for a symmetrized edge list),
-    * and the per-round left join that re-attaches contribution-less
-    * nodes is skipped — one fewer shuffle per round; a node that DOES
-    * lack in-edges would silently drop from the result, so the flag
-    * stays off unless the graph shape guarantees it. */
   /** Broadcast hint for the NODE-SIZED side of the per-round joins in
     * the iterative operators (pagerank / label propagation / k-core /
     * CC): a localCheckpoint boundary erases plan statistics (a
@@ -65,125 +32,197 @@ object Graph {
     * shuffled again; above it the shuffle join IS the right plan
     * (a billion-node score table must not be broadcast). */
   private[ext] val BroadcastNodeCap = 2000000L
-  private[ext] def nodeSide(df: DataFrame, rows: Long): DataFrame =
-    if (rows <= BroadcastNodeCap) broadcast(df) else df
+  private[ext] def nodeSide(df: DataFrame, rows: Long,
+                            cap: Long = BroadcastNodeCap): DataFrame =
+    if (rows <= cap) broadcast(df) else df
 
-  /** ORDER-PRESERVING dictionary encoding of STRING node ids to dense
-    * longs for the iterative operators (guide §2.2/§2.3: narrower
-    * keys): every per-round join/aggregate/broadcast then runs on
-    * 8-byte longs instead of strings — the per-round broadcast build
-    * gets Spark's specialized long-keyed hash relation and the
-    * (dst)/(dst,lbl) aggregates hash fixed-width keys; measured 10x
-    * heavier string broadcast builds at sf1 were the round-15 flag on
-    * this family. gid is assigned by [[Ids.contiguousIds]] over the
-    * SORTED distinct node set, so gid order == Spark string order —
-    * the proof labelPropagation's min-label tie-break needs:
-    * min(gid) decodes to exactly min(string). PageRank-family scores
-    * depend only on graph structure, so any bijection preserves them;
-    * LPA additionally needs the monotonicity. Encoding is gated on the
-    * same node cap as the broadcast hints (a billion-node dictionary
-    * must not be built around a shuffle-regime plan) and on the node
-    * column actually being a string. Decode is one broadcast join on
-    * the node-sized dictionary at output time. */
-  private[ext] def nodeDict(nodeNames: DataFrame): DataFrame =
-    CacheRegistry.pin(Ids.contiguousIds(nodeNames, "name"))
+  /** The kernel every fixed-round graph loop (pageRank,
+    * personalizedPageRank, labelPropagation, kCoreTrajectory) runs on.
+    * It owns the node ids, the loop-invariant arc table and the round
+    * loop; an operator supplies only its round step.
+    *
+    * NODE TABLE: one aggregate over both endpoints of every arc, with a
+    * source and a destination flag per node, eagerly checkpointed; one
+    * job then collects |all|, |src| and |dst|.
+    *
+    * DICTIONARY: string ids with |all| under `cap` run the rounds on
+    * dense longs (guide §2.2/§2.3: narrower keys) — the per-round
+    * broadcast build gets Spark's long-keyed hash relation and the
+    * (dst)/(dst,lbl) aggregates hash fixed-width keys; string builds
+    * measured 10x heavier at sf1. gid comes from [[Ids.contiguousIds]]
+    * over the SORTED src∪dst node set, so gid order == Spark string
+    * order: min(gid) decodes to exactly min(string), the proof
+    * labelPropagation's min-label tie-break needs (PageRank scores
+    * depend only on structure, so any bijection would do). Covering
+    * src∪dst makes the encode lossless: an arc into a node that is
+    * never a source keeps its endpoint, exactly as on long ids. Above
+    * the cap (or on non-string ids) nodes keep their own values — a
+    * billion-node dictionary must not be built around a shuffle-regime
+    * plan.
+    *
+    * ARC PIN: the encoded, deduplicated arcs, repartitioned on `key`
+    * (the column each round aggregates on) BEFORE the dedup — subset
+    * partitioning satisfies the distinct's clustering, so the build is
+    * ONE exchange, encode joins fused into the same pass. It is a pin,
+    * not a checkpoint: a localCheckpoint erases partitioning
+    * (UnknownPartitioning on the LogicalRDD) while an InMemoryRelation
+    * keeps it, so under the cap every round's aggregate on `key` is
+    * exchange-free (guide §2.4). Above the cap the same pin is built:
+    * the rounds sort-merge and re-exchange there either way, its
+    * lineage is the caller's edge plan plus one exchange (a
+    * checkpoint's truncation buys nothing), and it stays recomputable
+    * if blocks are lost — one build for both regimes, so the over-cap
+    * path runs the same arc code as the judged one.
+    *
+    * ROUNDS: [[run]] checkpoints every generation a later round reads
+    * (lineage and analysis cost stay flat; unmaterialized rounds
+    * measured 8x slower on x169, the optimizer planning nested
+    * broadcasts that re-execute the chain) and releases the parent
+    * generation only after the child has materialized. */
+  private[ext] final class Loop private (
+      val arcs: DataFrame, val nAll: Long, val nSrc: Long, val nDst: Long,
+      table: DataFrame, dict: Option[DataFrame], rounds: Int, cap: Long) {
 
-  def pageRank(edges: DataFrame, iterations: Int,
-               scale: Long = 1000000000000L,
-               checkpointEvery: Int = 1,
-               allNodesReceive: Boolean = false): DataFrame = {
-    require(checkpointEvery >= 1, "checkpointEvery must be positive")
-    require(iterations >= 1 && iterations <= 64,
-      s"iterations must be in [1, 64]; got $iterations")
-    val arcsIn = edges.select(col("src"), col("dst"))
-    // node set + count FIRST (one node-sized aggregate over the raw
-    // arcs): gates both the broadcast hint and the dictionary
-    val nodesRaw = CacheRegistry.checkpoint(
-      arcsIn.select(col("src").as("name")).distinct())
-    val n = nodesRaw.count() // one driver scalar
-    require(n > 0, "pageRank needs a non-empty edge list")
-    // string node ids under the broadcast cap run the rounds on dense
-    // longs (see [[nodeDict]])
-    val isStr = arcsIn.schema("src").dataType ==
-      org.apache.spark.sql.types.StringType
-    val dict: Option[DataFrame] =
-      if (isStr && n <= BroadcastNodeCap) Some(nodeDict(nodesRaw))
-      else None
-    // The arc table is the ONLY corpus-sized frame, and its build costs
-    // exactly ONE exchange in the broadcast regime: repartition(dst)
-    // BEFORE the dedup (subset partitioning satisfies the distinct's
-    // clustering — the LPA trick), with the encode joins fused into the
-    // same pass. It is a PIN, not a checkpoint — a localCheckpoint
-    // erases partitioning (UnknownPartitioning on the LogicalRDD, read
-    // off the committed round-15 plans) while an InMemoryRelation
-    // preserves it, so every round's contribution aggregate on dst is
-    // exchange-free (guide §2.4). Arcs no longer carry a deg column:
-    // score div deg is a function of the SOURCE node alone, so the
-    // division moved to the node-sized broadcast side (sdd below) —
-    // the round-15 eDeg shape paid an arc-sized deg-attach join at
-    // build and shipped an extra long per arc for nothing. Above the
-    // cap the rounds sort-merge on src and re-exchange either way, so
-    // the plain distinct checkpoint is kept there.
-    val arcs = dict match {
-      case Some(d) => CacheRegistry.pin(
-        arcsIn.join(broadcast(d.select(col("name").as("sname"),
-            col("gid").as("sgid"))), arcsIn("src") === col("sname"))
-          .join(broadcast(d.select(col("name").as("dname"),
-            col("gid").as("dgid"))), arcsIn("dst") === col("dname"))
-          .select(col("sgid").as("src"), col("dgid").as("dst"))
-          .repartition(col("dst")).distinct())
-      case None =>
-        if (n <= BroadcastNodeCap)
-          CacheRegistry.pin(arcsIn.repartition(col("dst")).distinct())
-        else CacheRegistry.checkpoint(arcsIn.distinct())
+    /** Every src∪dst node, one column `node`, in the rounds' encoding. */
+    def nodes: DataFrame = dict match {
+      case Some(d) => d.select(col("gid").as("node"))
+      case None => table.select(col("name").as("node"))
     }
-    // the eager checkpoint materializes the arcs pin as a side effect
-    // (full scan); deg is node-sized — lineage truncation keeps every
-    // round's broadcast-build plan flat
+
+    /** Broadcast hint for a node-sized side under the cap. */
+    def side(df: DataFrame): DataFrame = nodeSide(df, nAll, cap)
+
+    /** Node ids in `cols` to the rounds' encoding; a side-input row whose
+      * id is not a graph node drops. */
+    def encode(df: DataFrame, cols: String*): DataFrame =
+      remap(dict, df, cols, "name", "gid")
+
+    /** Node ids in `cols` back from the rounds' encoding. */
+    def decode(df: DataFrame, cols: String*): DataFrame =
+      remap(dict, df, cols, "gid", "name")
+
+    /** Runs the loop's rounds of `step` from `init` and returns the last
+      * generation. Each generation a later round reads — and, when
+      * `observe` is given, every generation — is eagerly checkpointed
+      * and handed to `observe`; its parent is released only then. `init`
+      * stays the caller's, and so does an observed last generation. */
+    def run(init: DataFrame, observe: Option[DataFrame => Unit] = None)(
+        step: DataFrame => DataFrame): DataFrame = {
+      var cur = init
+      var parent: Option[DataFrame] = None
+      for (i <- 1 to rounds) {
+        cur = step(cur)
+        if (i < rounds || observe.isDefined) {
+          val child = CacheRegistry.checkpoint(cur) // eager: materialized
+          parent.foreach(CacheRegistry.release)
+          parent = Some(child)
+          cur = child
+          observe.foreach(_(child))
+        }
+      }
+      cur
+    }
+  }
+
+  private[ext] object Loop {
+    def apply(edges: DataFrame, key: String, rounds: Int,
+              maxRounds: Int = 64, cap: Long = BroadcastNodeCap): Loop = {
+      require(rounds >= 1 && rounds <= maxRounds,
+        s"iterations must be in [1, $maxRounds]; got $rounds")
+      val arcsIn = edges.select(col("src"), col("dst"))
+      // pos 0 = the arc's src end, pos 1 = its dst end
+      val table = CacheRegistry.checkpoint(
+        arcsIn.select(posexplode(array(col("src"), col("dst"))))
+          .groupBy(col("col").as("name"))
+          .agg((min(col("pos")) === 0).as("is_src"),
+            (max(col("pos")) === 1).as("is_dst")))
+      val c = table.agg(count(lit(1)), count_if(col("is_src")),
+        count_if(col("is_dst"))).head() // one job, three counts
+      val nAll = c.getLong(0)
+      val isStr = arcsIn.schema("src").dataType ==
+        org.apache.spark.sql.types.StringType
+      val dict =
+        if (isStr && nAll <= cap)
+          Some(CacheRegistry.pin(Ids.contiguousIds(table, "name")))
+        else None
+      val arcs = CacheRegistry.pin(remap(dict, arcsIn, Seq("src", "dst"),
+        "name", "gid").repartition(col(key)).distinct())
+      new Loop(arcs, nAll, c.getLong(1), c.getLong(2), table, dict,
+        rounds, cap)
+    }
+  }
+
+  /** Replace the values of `cols` through the dictionary's `from` ->
+    * `to` map: one broadcast join per column; identity without one. */
+  private def remap(dict: Option[DataFrame], df: DataFrame,
+                    cols: Seq[String], from: String,
+                    to: String): DataFrame = dict match {
+    case None => df
+    case Some(d) =>
+      cols.foldLeft(df) { (acc, c) =>
+        acc.join(broadcast(d.select(col(from).as(s"${c}__from"),
+          col(to).as(s"${c}__to"))), acc(c) === col(s"${c}__from"))
+      }.select(df.columns.toSeq.map(c =>
+        if (cols.contains(c)) col(s"${c}__to").as(c) else col(c)): _*)
+  }
+
+  /** Fixed-iteration PageRank (damping 0.85) on `edges(src, dst)`.
+    *
+    * Output nodes are the source nodes (DISTINCT src), and N is their
+    * count. Every arc counts toward its source's out-degree, including
+    * an arc into a sink (a node that is never a source); a sink scores
+    * nothing and its inflow leaks from the total. This holds on every
+    * path: long ids, string ids, and above the broadcast cap. Pass a
+    * symmetrized edge list for an undirected graph — every node then
+    * has out-degree >= 1 and no mass leaks.
+    *
+    * Update rule, all BIGINT with truncating division:
+    *   score_0(v)   = scale div N
+    *   score_k+1(v) = (score_0 * 15) div 100
+    *                  + (85 * sum_u->v(score_k(u) div deg(u))) div 100
+    *
+    * Scale shape (see [[Loop]]): degrees are aggregated once from the
+    * arc pin and checkpointed; each round divides score by degree on
+    * the node-sized side (|nodes| divisions instead of |arcs|), joins
+    * the arcs on src and sums on dst — exchange-free under the cap.
+    * When every node is both a source and a destination (any
+    * symmetrized list), the round's sum already covers every node and
+    * the left join that re-attaches nodes without in-arcs is skipped —
+    * one fewer join per round, row-identical. The only values collected
+    * are the node counts (one job, once). */
+  def pageRank(edges: DataFrame, iterations: Int,
+               scale: Long = 1000000000000L): DataFrame =
+    pageRank(edges, iterations, scale, BroadcastNodeCap)
+
+  private[ext] def pageRank(edges: DataFrame, iterations: Int, scale: Long,
+                            cap: Long): DataFrame = {
+    val loop = Loop(edges, "dst", iterations, cap = cap)
+    require(loop.nSrc > 0, "pageRank needs a non-empty edge list")
+    val arcs = loop.arcs
+    // the eager checkpoint materializes the arc pin as a side effect
     val deg = CacheRegistry.checkpoint(
       arcs.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
     val degR = deg.select(col("node").as("dnode"), col("deg"))
-    val init = scale / n
+    val init = scale / loop.nSrc
     val base = init * 15L / 100L
-
-    var cur = deg.select(col("node"), lit(init).as("score"))
-    var lastChk: Option[DataFrame] = None
-    for (i <- 1 to iterations) {
-      // per-source contribution computed on the NODE-SIZED side before
-      // the arc join: score div deg is constant across a source's
-      // out-arcs, so dividing here is |nodes| divisions instead of
-      // |arcs|, and the arc join ships one pre-divided long
-      val sdd = cur.join(nodeSide(degR, n), cur("node") === col("dnode"))
+    val allReceive = loop.nSrc == loop.nAll && loop.nDst == loop.nAll
+    val out = loop.run(deg.select(col("node"), lit(init).as("score"))) { cur =>
+      val sdd = cur.join(loop.side(degR), cur("node") === col("dnode"))
         .select(cur("node").as("node"), expr("score div deg").as("sdd"))
       val contrib = arcs
-        .join(nodeSide(sdd, n), arcs("src") === sdd("node"))
+        .join(loop.side(sdd), arcs("src") === sdd("node"))
         .groupBy(col("dst"))
         .agg(sum(col("sdd")).as("c"))
-      cur =
-        if (allNodesReceive)
-          contrib.select(col("dst").as("node"),
-            (lit(base) + expr("85 * c div 100")).as("score"))
-        else
-          // contrib (node-sized, consumed once, materialized by this
-          // round's checkpoint) broadcasts under the same gate, so the
-          // checkpointed deg side never shuffles or sorts per round
-          deg.select(col("node"))
-            .join(nodeSide(contrib, n), col("node") === col("dst"), "left")
-            .select(col("node"),
-              (lit(base) + expr("85 * coalesce(c, 0L) div 100")).as("score"))
-      if (i % checkpointEvery == 0 && i < iterations) {
-        val chk = CacheRegistry.checkpoint(cur)
-        lastChk.foreach(CacheRegistry.release)
-        lastChk = Some(chk)
-        cur = chk
-      }
+      if (allReceive)
+        contrib.select(col("dst").as("node"),
+          (lit(base) + expr("85 * c div 100")).as("score"))
+      else
+        deg.select(col("node"))
+          .join(loop.side(contrib), col("node") === col("dst"), "left")
+          .select(col("node"),
+            (lit(base) + expr("85 * coalesce(c, 0L) div 100")).as("score"))
     }
-    dict match {
-      case Some(d) => // decode: one broadcast join on the node-sized dict
-        cur.join(broadcast(d), cur("node") === d("gid"))
-          .select(col("name").as("node"), col("score")).orderBy("node")
-      case None => cur.orderBy("node")
-    }
+    loop.decode(out, "node").orderBy("node")
   }
 
   /** PERSONALIZED PageRank: teleport mass lands only on the `seeds`
@@ -199,58 +238,28 @@ object Graph {
     * All BIGINT, truncating division, bit-identical across engines
     * and partitionings.
     *
-    * Scale shape identical to [[pageRank]] (edges+degrees
-    * checkpointed once, one equi-join + keyed sum per round,
-    * per-round checkpoint with eager release); the seed flag rides
-    * the checkpointed node frame, so personalization adds zero extra
-    * shuffles. Requires a symmetrized edge list like [[pageRank]].
+    * Node set as in [[pageRank]]: output nodes are the source nodes,
+    * arcs into sinks count toward out-degree on every path, and S is
+    * the seeds that are source nodes. The seed flag rides the
+    * checkpointed node frame, so personalization adds zero extra
+    * shuffles.
     *
-    * `seeds`: one column `node`; members not in the graph are
+    * `seeds`: one column `node`; members that are not source nodes are
     * ignored. Output: (node, score), ordered by node. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            iterations: Int,
-                           scale: Long = 1000000000000L,
-                           checkpointEvery: Int = 1): DataFrame = {
-    require(checkpointEvery >= 1, "checkpointEvery must be positive")
-    require(iterations >= 1 && iterations <= 64,
-      s"iterations must be in [1, 64]; got $iterations")
-    val arcsIn = edges.select(col("src"), col("dst"))
-    // node set + count first (same build shape as [[pageRank]])
-    val namesRaw = CacheRegistry.checkpoint(
-      arcsIn.select(col("src").as("name")).distinct())
-    val nAll = namesRaw.count() // gates the per-round broadcast hint
-    val isStr = arcsIn.schema("src").dataType ==
-      org.apache.spark.sql.types.StringType
-    val dict: Option[DataFrame] =
-      if (isStr && nAll <= BroadcastNodeCap) Some(nodeDict(namesRaw))
-      else None
-    // one-exchange arc build, encode fused, dst-partitioned PIN in the
-    // broadcast regime — see [[pageRank]]; arcs carry no deg column
-    val arcs = dict match {
-      case Some(d) => CacheRegistry.pin(
-        arcsIn.join(broadcast(d.select(col("name").as("sname"),
-            col("gid").as("sgid"))), arcsIn("src") === col("sname"))
-          .join(broadcast(d.select(col("name").as("dname"),
-            col("gid").as("dgid"))), arcsIn("dst") === col("dname"))
-          .select(col("sgid").as("src"), col("dgid").as("dst"))
-          .repartition(col("dst")).distinct())
-      case None =>
-        if (nAll <= BroadcastNodeCap)
-          CacheRegistry.pin(arcsIn.repartition(col("dst")).distinct())
-        else CacheRegistry.checkpoint(arcsIn.distinct())
-    }
+                           scale: Long = 1000000000000L): DataFrame =
+    personalizedPageRank(edges, seeds, iterations, scale, BroadcastNodeCap)
+
+  private[ext] def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
+                                        iterations: Int, scale: Long,
+                                        cap: Long): DataFrame = {
+    val loop = Loop(edges, "dst", iterations, cap = cap)
+    val arcs = loop.arcs
     val deg = arcs.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-    // the seed flag rides the node frame (encoded when the dictionary
-    // is on), so personalization adds zero extra shuffles; the eager
-    // checkpoint materializes the arcs pin as a side effect
-    val seedSet = dict match {
-      case Some(d) =>
-        seeds.select(col("node").as("sdname")).distinct()
-          .join(broadcast(d), col("sdname") === d("name"))
-          .select(col("gid").as("node"), lit(1).as("sd"))
-      case None =>
-        seeds.select(col("node"), lit(1).as("sd")).distinct()
-    }
+    val seedSet = loop.encode(seeds.select(col("node")).distinct(), "node")
+      .select(col("node"), lit(1).as("sd"))
+    // the eager checkpoint materializes the arc pin as a side effect
     val nodes = CacheRegistry.checkpoint(
       deg.join(seedSet, Seq("node"), "left")
         .select(col("node"), col("deg"),
@@ -260,36 +269,22 @@ object Graph {
     val degR = nodes.select(col("node").as("dnode"), col("deg"))
     val init = scale / ns
     val base = init * 15L / 100L
-
-    var cur = nodes.select(col("node"),
-      (col("sd") * init).cast("bigint").as("score"))
-    var lastChk: Option[DataFrame] = None
-    for (i <- 1 to iterations) {
+    val out = loop.run(nodes.select(col("node"),
+        (col("sd") * init).cast("bigint").as("score"))) { cur =>
       // node-side division before the arc join — see [[pageRank]]
-      val sdd = cur.join(nodeSide(degR, nAll), cur("node") === col("dnode"))
+      val sdd = cur.join(loop.side(degR), cur("node") === col("dnode"))
         .select(cur("node").as("node"), expr("score div deg").as("sdd"))
       val contrib = arcs
-        .join(nodeSide(sdd, nAll), arcs("src") === sdd("node"))
+        .join(loop.side(sdd), arcs("src") === sdd("node"))
         .groupBy(col("dst"))
         .agg(sum(col("sdd")).as("c"))
-      cur = nodes.select(col("node"), col("sd"))
-        .join(nodeSide(contrib, nAll), col("node") === col("dst"), "left")
+      nodes.select(col("node"), col("sd"))
+        .join(loop.side(contrib), col("node") === col("dst"), "left")
         .select(col("node"),
           (col("sd") * base + expr("85 * coalesce(c, 0L) div 100"))
             .cast("bigint").as("score"))
-      if (i % checkpointEvery == 0 && i < iterations) {
-        val chk = CacheRegistry.checkpoint(cur)
-        lastChk.foreach(CacheRegistry.release)
-        lastChk = Some(chk)
-        cur = chk
-      }
     }
-    dict match {
-      case Some(d) => // decode: one broadcast join on the node-sized dict
-        cur.join(broadcast(d), cur("node") === d("gid"))
-          .select(col("name").as("node"), col("score")).orderBy("node")
-      case None => cur.orderBy("node")
-    }
+    loop.decode(out, "node").orderBy("node")
   }
 
   /** Synchronous label propagation (community detection) on a
@@ -307,90 +302,33 @@ object Graph {
     * label)) — struct ordering gives max count then lexicographic
     * min label, with no per-node window.
     *
-    * Scale shape identical to [[pageRank]]: the edge list is
-    * checkpointed once; each round is an equi-join of edges with the
-    * current labels on src plus two keyed aggregates on dst; label
-    * frontiers are checkpointed per round with eager release. A node
-    * with no in-edge would drop out — symmetrize, as required.
-    */
-  def labelPropagation(edges: DataFrame, iterations: Int): DataFrame = {
-    require(iterations >= 1 && iterations <= 64,
-      s"iterations must be in [1, 64]; got $iterations")
-    val arcs = edges.select(col("src"), col("dst"))
-    // node set + count FIRST (one node-sized aggregate over the raw
-    // arcs): it gates both the broadcast hint and the dictionary, and
-    // with the dictionary in hand the label INIT is the dictionary
-    // itself — the old separate distinct-over-pinned-arcs init job
-    // disappears
-    val nodesRaw = CacheRegistry.checkpoint(
-      arcs.select(col("src").as("name")).distinct())
-    val n = nodesRaw.count() // gates the per-round broadcast hint
-    val isStr = arcs.schema("src").dataType ==
-      org.apache.spark.sql.types.StringType
-    // long-encoded rounds under the broadcast gate (see [[nodeDict]]):
-    // label_0(v) = v and the plurality argmax tie-breaks toward the
-    // SMALLEST label, so the encoding must be order-preserving —
-    // contiguousIds assigns gid by sorted name, hence
-    // min(struct(-c, gid)) decodes to exactly min(struct(-c, name))
-    val dict: Option[DataFrame] =
-      if (isStr && n <= BroadcastNodeCap) Some(nodeDict(nodesRaw))
-      else None
-    // dst-partitioned BEFORE the dedup (the aggregate only needs
-    // same-key co-location, which the subset partitioning provides, so
-    // the build still costs ONE exchange — now hashing longs when the
-    // dictionary is on), and PINNED rather than checkpointed (a
-    // localCheckpoint erases partitioning — UnknownPartitioning on the
-    // LogicalRDD): in the broadcast regime the per-round join preserves
-    // this partitioning and BOTH per-round aggregates — (dst, lbl)
-    // counts and the per-dst argmax — run exchange-free (guide §2.4).
-    // Above the cap the rounds sort-merge on src and re-exchange either
-    // way, so nothing is lost. The edge table is loop-invariant with a
-    // shallow lineage, so a checkpoint's lineage truncation buys
-    // nothing here.
-    val e = CacheRegistry.pin(dict match {
-      case Some(d) =>
-        arcs.join(broadcast(d.select(col("name").as("sname"),
-            col("gid").as("sgid"))), arcs("src") === col("sname"))
-          .join(broadcast(d.select(col("name").as("dname"),
-            col("gid").as("dgid"))), arcs("dst") === col("dname"))
-          .select(col("sgid").as("src"), col("dgid").as("dst"))
-          .repartition(col("dst")).distinct()
-      case None =>
-        arcs.repartition(col("dst")).distinct()
-    })
-    var cur: DataFrame = dict match {
-      case Some(d) => CacheRegistry.checkpoint(
-        d.select(col("gid").as("node"), col("gid").as("lbl")))
-      case None => CacheRegistry.checkpoint(
-        nodesRaw.select(col("name").as("node"),
-          col("name").as("lbl")))
-    }
-    var lastChk: Option[DataFrame] = Some(cur)
-    for (i <- 1 to iterations) {
-      cur = e.join(nodeSide(cur, n), e("src") === cur("node"))
+    * Node set: a round labels exactly the nodes with an in-arc from a
+    * node labelled in the round before (round 0 labels every node), so
+    * on a symmetrized list every node keeps a label; on a directed list
+    * a node without in-arcs is never in the output, and a sink is
+    * labelled but passes nothing on. This holds on every path: long
+    * ids, string ids, and above the broadcast cap.
+    *
+    * Scale shape (see [[Loop]]): each round is an equi-join of the
+    * dst-partitioned arc pin with the current labels on src plus two
+    * keyed aggregates on dst, both exchange-free under the cap. */
+  def labelPropagation(edges: DataFrame, iterations: Int): DataFrame =
+    labelPropagation(edges, iterations, BroadcastNodeCap)
+
+  private[ext] def labelPropagation(edges: DataFrame, iterations: Int,
+                                    cap: Long): DataFrame = {
+    val loop = Loop(edges, "dst", iterations, cap = cap)
+    val e = loop.arcs
+    val out = loop.run(loop.nodes.select(col("node"), col("node").as("lbl"))) { cur =>
+      e.join(loop.side(cur), e("src") === cur("node"))
         .groupBy(col("dst"), col("lbl"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col("dst").as("node"))
         .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l"))).as("m"))
         .select(col("node"), col("m.l").as("lbl"))
-      if (i < iterations) {
-        val chk = CacheRegistry.checkpoint(cur)
-        lastChk.foreach(CacheRegistry.release)
-        lastChk = Some(chk)
-        cur = chk
-      }
     }
-    dict match {
-      case Some(d) => // decode node AND label via two dict broadcasts
-        val dn = d.select(col("name").as("n_name"), col("gid").as("n_gid"))
-        val dl = d.select(col("name").as("l_name"), col("gid").as("l_gid"))
-        cur.join(broadcast(dn), cur("node") === col("n_gid"))
-          .join(broadcast(dl), cur("lbl") === col("l_gid"))
-          .select(col("n_name").as("node"), col("l_name").as("label"))
-          .orderBy("node")
-      case None =>
-        cur.select(col("node"), col("lbl").as("label")).orderBy("node")
-    }
+    loop.decode(out, "node", "lbl")
+      .select(col("node"), col("lbl").as("label")).orderBy("node")
   }
 
   /** Per-node triangle counts on an undirected graph, via the
@@ -456,112 +394,58 @@ object Graph {
     * fixpoint; the curve flattening at round r < rounds proves
     * convergence in-band).
     *
-    * Scale shape: per round, one keyed degree count and two
-    * semi-joins (src, dst) against the surviving-node set — the
-    * standard distributed peel; each round's edge frame is
-    * checkpointed with eager release of the previous one (same
-    * rationale as [[pageRank]]: unmaterialized rounds re-execute the
-    * chain under nested broadcasts). The only driver traffic is TWO
-    * SCALARS per round — counting a checkpointed frame costs nothing
-    * extra and lets the superseded round be unpersisted immediately
-    * (a lazily-unioned trajectory would have to keep every round's
-    * blocks alive to the end).
+    * Scale shape (see [[Loop]]): the round state is the node-sized
+    * degree table alone. Survivors only shrink (a node kept in round r
+    * has degree >= k >= 1 in round r-1's edges, so it was kept then
+    * too), so round r's edges are the ORIGINAL arcs restricted to round
+    * r's survivors: one pass over the src-partitioned arc pin with two
+    * broadcast semi-joins (src, dst) and a keyed degree count —
+    * exchange-free under the cap, and no per-round edge generation is
+    * built or held. Each round's degree table is checkpointed (a
+    * lineage-carrying one would nest every earlier round's plan) and
+    * its two counts are the only values collected.
     *
     * Output: (round, n_nodes, n_arcs), round 1..rounds; n_nodes
     * counts nodes with a surviving arc, n_arcs counts DIRECTED arcs
     * (2x undirected edges). */
   def kCoreTrajectory(edges: DataFrame, k: Long, rounds: Int): DataFrame = {
-    require(k >= 1 && rounds >= 1 && rounds <= 16,
-      s"need k >= 1 and 1 <= rounds <= 16; got k=$k rounds=$rounds")
+    require(k >= 1, s"need k >= 1; got k=$k")
     val spark = edges.sparkSession
     import spark.implicits._
     // symmetrize internally (same contract as degreeAssortativity /
     // richClub): degree is counted from src alone, so a caller passing
     // canonical lo<hi edges would silently halve degrees — the
-    // union+distinct makes any orientation convention correct, and is
-    // idempotent (a no-op distinct) on an already-symmetric list
-    // both orientations via ONE explode instead of union(edges,
+    // distinct of the arc pin makes any orientation convention correct.
+    // Both orientations come from ONE explode instead of union(edges,
     // edges.mirror): a union executes the caller's (possibly
     // un-checkpointed, e.g. x328's lineitem⨝orders) edge subtree once
-    // PER BRANCH in every pass that scans it — explode emits the same
-    // two arcs per input row in a single execution
+    // PER BRANCH in every pass that scans it
     val sym = edges.select(explode(array(
         struct(col("src").as("s"), col("dst").as("d")),
         struct(col("dst").as("s"), col("src").as("d")))).as("e"))
       .select(col("e.s").as("src"), col("e.d").as("dst"))
-    // node set + count first: gates the broadcast hint for every round
-    // (nodes only shrink while peeling) and the dictionary; the output
-    // is (round, n_nodes, n_arcs) COUNTS only, so any bijective
-    // encoding is transparent and nothing ever decodes
-    val nodesRaw = CacheRegistry.checkpoint(
-      sym.select(col("src").as("name")).distinct())
-    val n0 = nodesRaw.count()
-    val isStr = sym.schema("src").dataType ==
-      org.apache.spark.sql.types.StringType
-    val dict: Option[DataFrame] =
-      if (isStr && n0 <= BroadcastNodeCap) Some(nodeDict(nodesRaw))
-      else None
-    // src-partitioned before the dedup (same one-exchange build as the
-    // plain distinct — the dedup aggregate is satisfied by the subset
-    // partitioning) and held as a PIN — a localCheckpoint would erase
-    // the partitioning (round-15 advice: the old repartition-then-
-    // checkpoint was a no-op). The per-round semi-joins preserve the
-    // partitioning in the broadcast regime, so every round's edge
-    // frame STAYS src-partitioned and its degree aggregate runs
-    // exchange-free (guide §2.4) — the old per-round checkpoint paid
-    // one Exchange hashpartitioning(src) per round for the rebuilt
-    // frame.
-    var e = CacheRegistry.pin(dict match {
-      case Some(d) =>
-        sym.join(broadcast(d.select(col("name").as("sname"),
-            col("gid").as("sgid"))), sym("src") === col("sname"))
-          .join(broadcast(d.select(col("name").as("dname"),
-            col("gid").as("dgid"))), sym("dst") === col("dname"))
-          .select(col("sgid").as("src"), col("dgid").as("dst"))
-          .repartition(col("src")).distinct()
-      case None => sym.repartition(col("src")).distinct()
-    })
-    // ONE degree aggregation per round serves BOTH consumers: the
-    // round's (n_nodes, n_arcs) trajectory row and the next round's
-    // keep set. deg stays a CHECKPOINT, not a pin — deliberately: the
-    // next round's edge frame references deg (via keep), and deg
-    // references this round's edge frame, so a pinned (lineage-
-    // carrying) deg makes the logical plan DOUBLE per round —
-    // analysis/canonicalization of the 2^rounds tree hangs the driver
-    // long before execution starts (measured: the all-pins variant
-    // never finished round 3 at sf0.1). Checkpointing the NODE-SIZED
-    // deg truncates exactly the doubling branch for the cost of
-    // materializing a 16k-row frame, while the arc-sized e stays a
-    // PIN whose src partitioning the broadcast semi-joins preserve —
-    // plan growth is linear in rounds and every round's degree
-    // aggregate is exchange-free.
-    var deg = CacheRegistry.checkpoint(
-      e.groupBy("src").agg(count(lit(1)).as("deg")))
-    val traj = (1 to rounds).map { r =>
+    // counts only are output, so the encoding is never decoded
+    val loop = Loop(sym, "src", rounds, maxRounds = 16)
+    val e = loop.arcs
+    def degrees(arcs: DataFrame) =
+      arcs.groupBy("src").agg(count(lit(1)).as("deg"))
+    val deg0 = CacheRegistry.checkpoint(degrees(e))
+    val traj = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+    val last = loop.run(deg0, Some { (deg: DataFrame) =>
+      val row = deg.agg(count(lit(1)), sum(col("deg"))).head()
+      traj += ((traj.size + 1L, row.getLong(0),
+        if (row.isNullAt(1)) 0L else row.getLong(1)))
+      ()
+    }) { deg =>
       val keep = deg.where(col("deg") >= k).select(col("src").as("node"))
-      val prevE = e; val prevDeg = deg
-      e = CacheRegistry.pin(
-        prevE.join(nodeSide(keep.select(col("node").as("src")), n0),
-            Seq("src"), "left_semi")
-          .join(nodeSide(keep.select(col("node").as("dst")), n0),
-            Seq("dst"), "left_semi")
-          .select("src", "dst"))
-      // the eager checkpoint materializes this round's e pin (full
-      // scan) and truncates deg's lineage; only then is the superseded
-      // generation released (a pin read during its parent's release
-      // could not recompute — see CacheRegistry.release's caveat)
-      deg = CacheRegistry.checkpoint(
-        e.groupBy("src").agg(count(lit(1)).as("deg")))
-      CacheRegistry.release(prevE)
-      CacheRegistry.release(prevDeg)
-      val row = deg.agg(count(lit(1)).as("n_nodes"),
-        sum(col("deg")).as("n_arcs")).collect().head
-      (r.toLong, row.getLong(0),
-        if (row.isNullAt(1)) 0L else row.getLong(1))
+      degrees(e
+        .join(loop.side(keep.select(col("node").as("src"))),
+          Seq("src"), "left_semi")
+        .join(loop.side(keep.select(col("node").as("dst"))),
+          Seq("dst"), "left_semi"))
     }
-    CacheRegistry.release(e)
-    CacheRegistry.release(deg)
-    traj.toDF("round", "n_nodes", "n_arcs").orderBy("round")
+    Seq(e, deg0, last).foreach(CacheRegistry.release)
+    traj.toSeq.toDF("round", "n_nodes", "n_arcs").orderBy("round")
   }
 
   /** DEGREE ASSORTATIVITY of an undirected edge list (one row): the

@@ -1,5 +1,6 @@
 package graft.io
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import graft.ingest.Xlsx
 
@@ -28,22 +29,30 @@ object Save {
   }
 
   /** Distributed write to a temp dir, then move the single part file to
-    * the requested path (the reference's one-file contract). */
+    * the requested path (the reference's one-file contract). The temp
+    * dir (with Spark's `_SUCCESS` and `.crc` side files) is deleted
+    * whether or not the write succeeds. */
   private def writeSingle(df: DataFrame, path: String, format: String): Unit = {
     import java.nio.file._
-    val tmp = Files.createTempDirectory("graft_save").resolve("out")
-    val writer = df.coalesce(1).write.mode("overwrite")
-    (format match {
-      case "csv" => writer.option("header", true)
-      case _ => writer
-    }).format(format).save(tmp.toString)
-    val part = Files.list(tmp).iterator()
-    var found: Path = null
-    while (part.hasNext) {
-      val p = part.next()
-      if (p.getFileName.toString.startsWith("part-")) found = p
+    val root = Files.createTempDirectory("graft_save")
+    try {
+      val tmp = root.resolve("out")
+      val writer = df.coalesce(1).write.mode("overwrite")
+      (format match {
+        case "csv" => writer.option("header", true)
+        case _ => writer
+      }).format(format).save(tmp.toString)
+      val listing = Files.list(tmp)
+      val found = try listing.iterator().asScala
+        .find(_.getFileName.toString.startsWith("part-"))
+      finally listing.close()
+      require(found.isDefined, s"no part file produced under $tmp")
+      Files.move(found.get, Paths.get(path), StandardCopyOption.REPLACE_EXISTING)
+    } finally {
+      val tree = Files.walk(root)
+      try tree.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.delete(p))
+      finally tree.close()
     }
-    require(found != null, s"no part file produced under $tmp")
-    Files.move(found, Paths.get(path), StandardCopyOption.REPLACE_EXISTING)
   }
 }

@@ -451,7 +451,7 @@ private[queries] object ExtQDedup {
       // oracle-exact since round 12: cluster boundaries ARE derivable —
       // the kmeans fit is integer-deterministic, so DuckDB re-derives
       // fit + in-cell exact-cosine victims + survivors byte-for-byte
-      // (ExtShared.semDedupOracleSql; tools/proto_semdedup_oracle.py)
+      // (ExtShared.semDedupOracleSql)
       semDedupOracleSql(cells = 8, iters = 3, dim = 64,
         minCosX10k = 9900L)),
 

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ext.{AsofJoin, Basket, Bpe, Cdc, Curation, Dedup, Entity, Expectations, Experiment, Graph, Ids, LmQuality, Multimodal, Pack, Privacy, Profile, Rollup, Sampling, SessionConf, Similarity, TextStats, TimeSeries}
@@ -8,6 +9,31 @@ import graft.queries.ExtShared._
 
 /** §2.8 judged queries — graph + entity resolution: pagerank, k-core, components, canonicalization. */
 private[queries] object ExtQGraph {
+
+  /** The symmetrized customer-supplier graph of x169, x183 and x259:
+    * one arc per distinct (customer, supplier) purchase pair, as
+    * prefixed string ids `c<custkey>` / `s<suppkey>`, in both
+    * orientations. */
+  private def custSuppGraph(s: SparkSession, dir: String): DataFrame = {
+    val li = Tables.load(s, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_suppkey"))
+    val ord = Tables.load(s, dir, "orders")
+      .select(col("o_orderkey"), col("o_custkey"))
+    // distinct on the (custkey, suppkey) LONG pair BEFORE building the
+    // string ids: the prefixes make the concat injective, so the
+    // distinct sets are in bijection — but the exchange carries two
+    // longs instead of two strings and the concat runs once per
+    // DISTINCT pair instead of once per joined row. Checkpointed BEFORE
+    // mirroring: the union references the join+distinct subtree twice
+    // (same trap Dedup.clusters guards against)
+    val cs = graft.ext.CacheRegistry.checkpoint(
+      li.join(ord, li("l_orderkey") === ord("o_orderkey"))
+        .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
+        .distinct()
+        .select(concat(lit("c"), col("ck")).as("src"),
+          concat(lit("s"), col("sk")).as("dst")))
+    cs.union(cs.select(col("dst").as("src"), col("src").as("dst")))
+  }
 
   val qs: Seq[Q] = Seq(
 
@@ -26,29 +52,7 @@ private[queries] object ExtQGraph {
     // customer-supplier graph. Oracle: the same rounds unrolled as
     // materialized CTEs.
     Q.df("x169_graph_pagerank",
-      (s, dir) => {
-        val li = Tables.load(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_suppkey"))
-        val ord = Tables.load(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"))
-        // checkpoint BEFORE mirroring: the union references the
-        // expensive join+distinct subtree twice (same trap
-        // Dedup.clusters guards against)
-        // distinct on the (custkey, suppkey) LONG pair BEFORE building
-        // the string node ids: the prefixes make the concat injective,
-        // so the distinct sets are in bijection — but the exchange
-        // carries two longs instead of two strings and the concat runs
-        // once per DISTINCT pair instead of once per joined row
-        val cs = graft.ext.CacheRegistry.checkpoint(
-          li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-            .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-            .distinct()
-            .select(concat(lit("c"), col("ck")).as("src"),
-              concat(lit("s"), col("sk")).as("dst")))
-        Graph.pageRank(
-          cs.union(cs.select(col("dst").as("src"), col("src").as("dst"))), 5,
-          allNodesReceive = true) // symmetric: every node receives
-      },
+      (s, dir) => Graph.pageRank(custSuppGraph(s, dir), 5),
       {
         val iters = 5
         val head =
@@ -253,25 +257,7 @@ private[queries] object ExtQGraph {
     // co-purchase graph — same per-round checkpoint shape as x169;
     // argmax is one min(struct(-count, label)) agg, no per-node window
     Q.df("x183_label_propagation",
-      (s, dir) => {
-        val li = Tables.load(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_suppkey"))
-        val ord = Tables.load(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"))
-        // distinct on the (custkey, suppkey) LONG pair BEFORE building
-        // the string node ids: the prefixes make the concat injective,
-        // so the distinct sets are in bijection — but the exchange
-        // carries two longs instead of two strings and the concat runs
-        // once per DISTINCT pair instead of once per joined row
-        val cs = graft.ext.CacheRegistry.checkpoint(
-          li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-            .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-            .distinct()
-            .select(concat(lit("c"), col("ck")).as("src"),
-              concat(lit("s"), col("sk")).as("dst")))
-        Graph.labelPropagation(
-          cs.union(cs.select(col("dst").as("src"), col("src").as("dst"))), 4)
-      },
+      (s, dir) => Graph.labelPropagation(custSuppGraph(s, dir), 4),
       {
         val iters = 4
         val head =
@@ -442,26 +428,10 @@ private[queries] object ExtQGraph {
     // oracle as x169 with the base term per-node
     Q.df("x259_personalized_pagerank",
       (s, dir) => {
-        val li = Tables.load(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_suppkey"))
-        val ord = Tables.load(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"))
-        // distinct on the (custkey, suppkey) LONG pair BEFORE building
-        // the string node ids: the prefixes make the concat injective,
-        // so the distinct sets are in bijection — but the exchange
-        // carries two longs instead of two strings and the concat runs
-        // once per DISTINCT pair instead of once per joined row
-        val cs = graft.ext.CacheRegistry.checkpoint(
-          li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-            .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-            .distinct()
-            .select(concat(lit("c"), col("ck")).as("src"),
-              concat(lit("s"), col("sk")).as("dst")))
-        val edges = cs.union(
-          cs.select(col("dst").as("src"), col("src").as("dst")))
-        val seeds = ord.where(col("o_custkey") % 20 === 0)
+        val seeds = Tables.load(s, dir, "orders")
+          .where(col("o_custkey") % 20 === 0)
           .select(concat(lit("c"), col("o_custkey")).as("node")).distinct()
-        Graph.personalizedPageRank(edges, seeds, 4)
+        Graph.personalizedPageRank(custSuppGraph(s, dir), seeds, 4)
       },
       {
         val iters = 4

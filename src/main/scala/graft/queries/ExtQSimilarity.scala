@@ -129,7 +129,7 @@ private[queries] object ExtQSimilarity {
     // product-quantization ANN with exact re-rank. Oracle-exact since
     // round 12: the per-subspace codebook fit is deterministic integer
     // arithmetic, so DuckDB re-derives fit + ADC + re-rank byte-for-byte
-    // (ExtShared.pqOracleSql; validated in tools/proto_pq_oracle.py)
+    // (ExtShared.pqOracleSql)
     Q.df("x103_knn_pq",
       (s, dir) => Similarity.knnPQ(Tables.load(s, dir, "embeddings"), 20, 3),
       pqOracleSql(nQueries = 20, k = 3, m = 8, ksub = 32, iters = 3,

@@ -78,8 +78,7 @@ private[queries] object ExtShared {
     * (above) + final corpus assignment + per-query nprobe cell probe +
     * exact quantized scoring inside the probed cells + top-k. Output:
     * (qid, vec_id, dot_q, rn) ordered by (qid, rn) — byte-identical to
-    * the Spark operator (validated cell-by-cell; see
-    * tools/proto_ivf_oracle.py). */
+    * the Spark operator (validated cell-by-cell by the x72 oracle). */
   def ivfOracleSql(nQueries: Int, k: Int, cells: Int, nprobe: Int,
                    iters: Int, dim: Int): String =
     s"""WITH corpus AS MATERIALIZED (
@@ -320,7 +319,7 @@ private[queries] object ExtShared {
 
   /** Full DuckDB twin of x103 [[graft.ext.Similarity.knnPQ]]: PQ fit
     * on raw vectors, whole-corpus ADC, exact re-rank. Output matches
-    * the Spark operator byte-for-byte (tools/proto_pq_oracle.py). */
+    * the Spark operator byte-for-byte (judged by the x103 oracle). */
   def pqOracleSql(nQueries: Int, k: Int, m: Int, ksub: Int, iters: Int,
                   refine: Int, dim: Int): String =
     s"""WITH corpus AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings),

@@ -563,6 +563,41 @@ class PlanSpec extends SparkSpec {
       !p.contains("BroadcastNestedLoop"), p)
     assert("hashpartitioning\\(dst".r.findFirstIn(p).nonEmpty, p)
     assert(p.contains("HashAggregate") || p.contains("ObjectHashAggregate"), p)
+    // symmetric graph (src = dst = all nodes): the round skips the left
+    // join that re-attaches nodes without in-arcs
+    assert(!p.contains("LeftOuter"), p)
+  }
+
+  // a bigint attribute prints as name#idL
+  test("x169/x183/x259 graph loops: the arc pin is hash-partitioned on a bigint dst") {
+    for (q <- Seq("x169_graph_pagerank", "x183_label_propagation",
+        "x259_personalized_pagerank")) {
+      val p = plan(q)
+      assert("hashpartitioning\\(dst#\\d+L,".r.findFirstIn(p).nonEmpty, s"$q: $p")
+    }
+  }
+
+  test("x328 k-core: the arc pin is hash-partitioned on a bigint src") {
+    // the trajectory is collected round by round, so its plans are only
+    // seen through the actions that run them
+    val plans = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[String]())
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = { plans.add(qe.executedPlan.toString); () }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries("x328_kcore_trajectory")(spark, dir).collect()
+      BusDrain.waiter(spark).foreach(_())
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val all = plans.asScala.mkString("\n")
+    assert("hashpartitioning\\(src#\\d+L,".r.findFirstIn(all).nonEmpty, all)
   }
 
   test("x171 importance select: keyed token joins; window only over the score histogram") {

@@ -1,5 +1,6 @@
 package graft.engine
 
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 import graft.io.Save
 
@@ -99,6 +100,14 @@ class SessionSpec extends SparkSpec {
   }
 
   test("save: csv single file + json NDJSON + xlsx round-trip") {
+    val tmpRoot = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def saveDirs(): Set[String] = {
+      val ls = java.nio.file.Files.list(tmpRoot)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_save")).toSet
+      finally ls.close()
+    }
+    val before = saveDirs()
     val s = freshSession()
     loadFixtures(s)
     s.sql("SELECT id, b FROM csv_csv ORDER BY id")
@@ -122,6 +131,8 @@ class SessionSpec extends SparkSpec {
     Save.save(s.latestResult.get, orcOut)
     assert(graft.ingest.Readers.read(spark, orcOut).get.count() == 3)
     intercept[IllegalArgumentException] { Save.save(s.latestResult.get, d.resolve("out.txt").toString) }
+    // every export cleans up its staging directory
+    assert(saveDirs() -- before == Set.empty[String])
   }
 
   test("glob->regex translation corners") {

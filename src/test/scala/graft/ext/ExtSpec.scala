@@ -1281,9 +1281,49 @@ class ExtSpec extends SparkSpec {
     val a = Graph.pageRank(sym, 3).collect().toSeq
     val b = Graph.pageRank(sym.repartition(17), 3).collect().toSeq
     assert(a == b && a.nonEmpty)
-    // on a symmetric graph the no-left-join fast path is row-identical
-    val c = Graph.pageRank(sym, 3, allNodesReceive = true).collect().toSeq
+    // the over-cap path (no dictionary, no broadcast hints) on the same
+    // string ids is row-identical to the dictionary path
+    val c = Graph.pageRank(sym, 3, 1000000000000L, 0L).collect().toSeq
     assert(a == c)
+  }
+
+  test("graph loops: string ids = long ids = over-cap path on a directed graph with sinks") {
+    import org.apache.spark.sql.DataFrame
+    import spark.implicits._
+    // 4 is a sink: the only node that is never the source of an arc
+    val arcs = Seq(0L -> 1L, 1L -> 0L, 0L -> 2L, 1L -> 3L, 3L -> 4L,
+      2L -> 4L, 3L -> 1L)
+    val longs = arcs.toDF("src", "dst")
+    val strs = arcs.map { case (a, b) => (s"v$a", s"v$b") }.toDF("src", "dst")
+    // node and label columns compared as strings: N <-> vN
+    def canon(df: DataFrame): Seq[Seq[Any]] =
+      df.collect().toSeq.map(r => r.schema.fieldNames.toSeq.map { f =>
+        (f, r.getAs[Any](f)) match {
+          case ("node" | "label", l: Long) => s"v$l"
+          case (_, v) => v
+        }
+      })
+    // (long ids, string ids) x (default cap, cap forced to 0)
+    def paths(op: (DataFrame, Long) => DataFrame): Seq[Seq[Seq[Any]]] =
+      for (e <- Seq(longs, strs); cap <- Seq(Graph.BroadcastNodeCap, 0L))
+        yield canon(op(e, cap))
+    def allEqual(ps: Seq[Seq[Seq[Any]]]): Unit =
+      ps.foreach(p => assert(p == ps.head && p.nonEmpty, ps.mkString("\n")))
+
+    // one round by hand: N = |src| = 4, init = 2.5e11, base = 3.75e10;
+    // every arc counts toward out-degree, 4 takes no score
+    val one = paths((e, cap) => Graph.pageRank(e, 1, 1000000000000L, cap))
+    allEqual(one)
+    assert(one.head == Seq(Seq("v0", 143750000000L), Seq("v1", 250000000000L),
+      Seq("v2", 143750000000L), Seq("v3", 143750000000L)))
+    allEqual(paths((e, cap) => Graph.pageRank(e, 3, 1000000000000L, cap)))
+    // seed 4 is not a source node, so only seed 1 teleports
+    allEqual(paths { (e, cap) =>
+      val seeds = if (e eq longs) Seq(1L, 4L).toDF("node")
+        else Seq("v1", "v4").toDF("node")
+      Graph.personalizedPageRank(e, seeds, 3, 1000000000000L, cap)
+    })
+    allEqual(paths((e, cap) => Graph.labelPropagation(e, 3, cap)))
   }
 
   test("importance select: top-quartile semantics and target-slice pull") {
