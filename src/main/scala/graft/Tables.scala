@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import scala.concurrent.duration._
+import graft.engine.Par
 
 /** Registry for the driver-generated test tables (TESTDATA.md).
   *
@@ -57,14 +59,20 @@ object Tables {
   // query (this dominated bench wall-clock at small SF).
   private val registered = scala.collection.mutable.Set[String]()
 
+  /** Bound on one [[registerAll]]'s footer reads: ten parquet opens
+    * that have not finished in ten minutes are wedged. */
+  private val RegisterWithin: FiniteDuration = 10.minutes
+
   /** Register every test table as a temp view. Lazy: no IO beyond the
-    * parquet footer until an action runs. View registration is the Spark
-    * analog of the reference's `self.tables[name] = df`
+    * parquet footer until an action runs. The tables open concurrently
+    * (graft.engine.Par) and register in `all` order. View registration
+    * is the Spark analog of the reference's `self.tables[name] = df`
     * (localsql/localsql.py:308). */
   def registerAll(spark: SparkSession, dir: String): Unit = synchronized {
     val key = System.identityHashCode(spark) + ":" + dir
     if (!registered.contains(key)) {
-      all.foreach { n => load(spark, dir, n).createOrReplaceTempView(n) }
+      Par.map(spark, all, RegisterWithin)(load(spark, dir, _)).zip(all)
+        .foreach { case (df, n) => df.createOrReplaceTempView(n) }
       registered += key
     }
   }

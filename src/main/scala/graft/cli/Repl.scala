@@ -80,8 +80,8 @@ object Repl {
       if (verbose) s"table=$name, columns=${df.columns.length}, rows=${df.count()}"
       else s"table '$name'"
     }
-    files.foreach { f =>
-      session.loadFile(f) match {
+    files.zip(session.loadFiles(files)).foreach { case (f, loaded) =>
+      loaded match {
         case Some(name) => eprint(s"Load '$f' as ${describe(name)}")
         case None => eprint(s"Unknown file type or load error: $f")
       }

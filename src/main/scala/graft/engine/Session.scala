@@ -1,5 +1,6 @@
 package graft.engine
 
+import scala.concurrent.duration._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ingest.{Discover, Naming, Readers}
 
@@ -11,6 +12,10 @@ import graft.ingest.{Discover, Naming, Readers}
   * SQLite DB per query (its core scalability wall, ref :230), here a
   * table is a lazily-planned temp view over the file: zero copies,
   * and Catalyst pushes filters/pruning into the scan.
+  *
+  * A directory's files load concurrently (each file's reader and schema
+  * inference overlap the others') and register in discovery order, so
+  * the catalog is the one a file-by-file load gives.
   */
 class Session(val spark: SparkSession,
               stringifyNested: Boolean = true,
@@ -25,23 +30,41 @@ class Session(val spark: SparkSession,
   /** Load one file; returns the registered table name, or None if the
     * format is unknown / the file fails to load (per-file tolerance,
     * ref :302-316). */
-  def loadFile(path: String): Option[String] =
-    try {
-      Readers.read(spark, path, stringifyNested, jsonNormalize).map { df =>
+  def loadFile(path: String): Option[String] = loadFiles(Seq(path)).head
+
+  /** Load files as tables; per input path, the registered table name,
+    * or None if the format is unknown / the file fails to load.
+    *
+    * The files' readers (schema inference included) run concurrently
+    * on [[Par]]; a file's failure is caught in its own task. The tables
+    * then register one by one in input order, so names, the `tables`
+    * order, last-wins on a name collision and the `[graft] skipping`
+    * messages are those of loading the files one after another. */
+  def loadFiles(paths: Seq[String]): Seq[Option[String]] = {
+    val read = Par.map(spark, paths, Session.LoadWithin) { p =>
+      try Right(Readers.read(spark, p, stringifyNested, jsonNormalize))
+      catch { case e: Exception => Left(e) }
+    }
+    paths.zip(read).map { case (path, r) =>
+      try r.toTry.get.map { df =>
         val name = Naming.tableName(path)
         tables(name) = df
         df.createOrReplaceTempView(name)
         name
       }
-    } catch {
-      case e: Exception =>
-        System.err.println(s"[graft] skipping $path: ${e.getMessage}")
-        None
+      catch {
+        case e: Exception =>
+          System.err.println(s"[graft] skipping $path: ${e.getMessage}")
+          None
+      }
     }
+  }
 
+  /** Load every file of a directory (discovery order, see [[Discover]])
+    * through [[loadFiles]]; the registered names. */
   def loadDir(dir: String, recursive: Boolean = false): Seq[String] = {
     val files = if (recursive) Discover.recursive(dir) else Discover.inDir(dir)
-    files.flatMap(p => loadFile(p.toString))
+    loadFiles(files.map(_.toString)).flatten
   }
 
   /** Run SQL; caches the result for export (ref run_lsql :216-233). */
@@ -83,6 +106,11 @@ class Session(val spark: SparkSession,
 }
 
 object Session {
+  /** Bound on one [[Session.loadFiles]] call: schema inference of a
+    * whole directory that has not finished in an hour is wedged, and the
+    * load fails instead of hanging the REPL. */
+  private val LoadWithin: FiniteDuration = 1.hour
+
   /** Standard builder: local[*] with shuffle partitions sized to cores
     * (32 on the test box; a real cluster tunes this to 2-3x total
     * cores), UTC session time. */

@@ -1,7 +1,9 @@
 package graft.ext
 
+import scala.concurrent.duration._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Par
 
 /** Storage-layout keys (beyond-reference, SURVEY.md §2.8).
   *
@@ -20,25 +22,15 @@ import org.apache.spark.sql.functions._
   */
 object Layout {
 
-  /** Evaluate independent layout candidates on a small thread pool:
+  /** Layout candidates are evaluated concurrently ([[graft.engine.Par]]):
     * each candidate's zipWithIndex pays an eager count job (plus the
     * range sort feeding it) during QUERY CONSTRUCTION, and the driver
-    * otherwise issues those jobs strictly serially — guide §2.6
-    * "overlap independent jobs": Spark's scheduler happily runs
-    * several jobs at once; actions are only sequential because the
-    * driver calls them sequentially. Result order == candidate order
-    * and each candidate is deterministic in isolation, so threading
-    * changes wall time only, never rows. */
-  private def parallelCandidates[A](xs: Seq[A])(f: A => DataFrame)
-      : Seq[DataFrame] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(xs.size)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    try xs.map(x => Future(f(x))).map(Await.result(_, Duration.Inf))
-    finally pool.shutdown()
-  }
+    * would otherwise issue those jobs strictly serially. Result order ==
+    * candidate order and each candidate is deterministic in isolation,
+    * so overlap changes wall time only, never rows. This bounds the
+    * candidates of one audit; they take seconds at sf0.1, so an hour
+    * means wedged, not slow. */
+  private val CandidatesWithin: FiniteDuration = 1.hour
 
   /** Interleave the low `bits` bits of a (odd positions) and b (even
     * positions) into a Morton key. Disjoint bit positions, so the
@@ -313,11 +305,12 @@ object Layout {
     }
     val h2 = hilbertKeyNd(base, Seq(col("x"), col("y")), bits)
     val h3 = hilbertKeyNd(base, Seq(col("x"), col("y"), col("z")), bits)
-    parallelCandidates(Seq(
+    Par.map(spark, Seq(
         ("1_natural",
           Seq(col("ok"), col("ln"), col("x"), col("y"), col("z"))),
         ("2_hilbert2d", Seq(h2, col("x"), col("y"), col("z"))),
-        ("3_hilbert3d", Seq(h3, col("x"), col("y"), col("z"))))) {
+        ("3_hilbert3d", Seq(h3, col("x"), col("y"), col("z")))),
+        CandidatesWithin) {
         case (n, o) => audit(n, o)
       }
       .reduce(_ unionByName _)
@@ -479,7 +472,7 @@ object Layout {
         max(col(c)).as(s"hi_$c"))).head,
       cols.flatMap(c => Seq(min(col(c)).as(s"lo_$c"),
         max(col(c)).as(s"hi_$c"))).tail: _*)
-    val perSort = parallelCandidates(cols) { sk =>
+    val perSort = Par.map(spark, cols, CandidatesWithin) { sk =>
       val others = cols.filterNot(_ == sk)
       val sorted = base.orderBy((col(sk) +: others.map(col)): _*)
       val files = Ids.zipIndexed(sorted, "gid", 0L)

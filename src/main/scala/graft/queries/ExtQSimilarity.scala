@@ -1,5 +1,6 @@
 package graft.queries
 
+import scala.concurrent.duration._
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ext.{AsofJoin, Basket, Bpe, Cdc, Curation, Dedup, Entity, Expectations, Experiment, Graph, Ids, LmQuality, Multimodal, Pack, Privacy, Profile, Rollup, Sampling, SessionConf, Similarity, TextStats, TimeSeries}
@@ -40,35 +41,24 @@ private[queries] object ExtQSimilarity {
         // tier's FIT runs driver-side collect rounds during query
         // construction — ~45 sub-0.5s-task jobs end to end, so the
         // wall was serial job-launch latency, not compute. Building
-        // the tiers on a small thread pool overlaps the fit rounds
-        // (guide §2.6 "overlap independent jobs": Spark's scheduler
-        // happily runs several jobs at once; actions are sequential
-        // only because the driver calls them sequentially). Each
-        // tier's fitted centroids/codes — and the judged rows — are
-        // untouched; only the driver-side serialization of the fit
-        // loops changes.
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(pool)
-        try {
-          val tiers = Seq(
-            Future(("ivf", Similarity.knnIvf(emb, 20, 3, 8))),
-            Future(("pq", Similarity.knnPQ(emb, 20, 3))),
-            Future(("ivfpq", Similarity.searchIvfPq(
-              Similarity.ivfPqIndexAt(s, annIndexPath(dir, "ivfpq_raw"),
-                emb),
-              emb, 20, 3))),
-            Future(("residual", Similarity.searchIvfPq(
-              Similarity.ivfPqIndexAt(s, annIndexPath(dir, "ivfpq_res"),
-                emb, residual = true),
-              emb, 20, 3))))
-          tiers.map(f => Await.result(f, Duration.Inf))
-            .map { case (t, df) => leg(t, df) }
-            .reduce(_ unionByName _)
-            .orderBy("tier")
-        } finally pool.shutdown()
+        // the tiers concurrently (graft.engine.Par) overlaps the fit
+        // rounds. Each tier's fitted centroids/codes — and the judged
+        // rows — are untouched; only the driver-side serialization of
+        // the fit loops changes. The fits take seconds at sf0.1, so
+        // the bound of an hour means wedged, not slow.
+        val tiers: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+          ("ivf", () => Similarity.knnIvf(emb, 20, 3, 8)),
+          ("pq", () => Similarity.knnPQ(emb, 20, 3)),
+          ("ivfpq", () => Similarity.searchIvfPq(
+            Similarity.ivfPqIndexAt(s, annIndexPath(dir, "ivfpq_raw"), emb),
+            emb, 20, 3)),
+          ("residual", () => Similarity.searchIvfPq(
+            Similarity.ivfPqIndexAt(s, annIndexPath(dir, "ivfpq_res"),
+              emb, residual = true),
+            emb, 20, 3)))
+        graft.engine.Par.map(s, tiers, 1.hour) { case (t, fit) => leg(t, fit()) }
+          .reduce(_ unionByName _)
+          .orderBy("tier")
       },
       annRecallOracleSql(nQueries = 20, k = 3, dim = 64)),
 

@@ -188,4 +188,53 @@ class SessionSpec extends SparkSpec {
     val loaded = s.loadDir(d.toString)
     assert(loaded == Seq("good_csv"))
   }
+
+  test("loadDir registers like a serial loadFile loop over Discover.inDir") {
+    import spark.implicits._
+    val d = tmpDir()
+    writeFile(d, "csv.csv", "id,b,c\n1,4,7\n2,5,8\n3,6,9\n")
+    val gz = new java.util.zip.GZIPOutputStream(
+      java.nio.file.Files.newOutputStream(d.resolve("zipped.csv.gz")))
+    gz.write("id,v\n1,a\n2,b\n".getBytes("UTF-8")); gz.close()
+    writeFile(d, "lines.json", "{\"id\":1,\"n\":{\"x\":1}}\n{\"id\":2,\"n\":{\"x\":2}}\n")
+    writeFile(d, "array.json", """[
+      |  {"id": 1, "b": 4},
+      |  {"id": 2, "c": 5}
+      |]""".stripMargin)
+    graft.ingest.Xlsx.write(Seq((1L, "p"), (2L, "q")).toDF("id", "s"),
+      d.resolve("sheet.xlsx").toString)
+    writeFile(d, "bad.xlsx", "this is not a zip")
+    writeFile(d, "skip.txt", "not a known format")
+    // both map to a_b_csv; discovery order puts a_b.csv last, so it wins
+    writeFile(d, "a.b.csv", "k\n1\n")
+    writeFile(d, "a_b.csv", "k,w\n2,3\n4,5\n")
+
+    /** The load's result and its `[graft] skipping` lines, in order. */
+    def load(f: Session => Seq[String]): (Session, Seq[String], Seq[String]) = {
+      val s = freshSession()
+      val buf = new java.io.ByteArrayOutputStream
+      val err = System.err
+      System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+      val names = try f(s) finally System.setErr(err)
+      (s, names, buf.toString("UTF-8").linesIterator
+        .filter(_.startsWith("[graft] skipping")).toSeq)
+    }
+    val (serial, serialNames, serialSkips) = load(s =>
+      graft.ingest.Discover.inDir(d.toString).flatMap(p => s.loadFile(p.toString)))
+    val (conc, concNames, concSkips) = load(_.loadDir(d.toString))
+
+    assert(serialNames == Seq("a_b_csv", "a_b_csv", "array_json", "csv_csv",
+      "lines_json", "sheet_xlsx", "zipped_csv_gz"))
+    assert(concNames == serialNames)
+    assert(conc.tableNames == serial.tableNames)
+    for (n <- serial.tableNames) {
+      assert(conc.tables(n).schema == serial.tables(n).schema, n)
+      assert(conc.tables(n).count() == serial.tables(n).count(), n)
+    }
+    def rows(s: Session) = s.tables("a_b_csv").as[(Int, Int)].collect().toSeq
+    assert(rows(conc) == Seq((2, 3), (4, 5)))
+    assert(rows(conc) == rows(serial))
+    assert(concSkips.size == 1 && concSkips.head.contains("bad.xlsx"), concSkips)
+    assert(concSkips == serialSkips)
+  }
 }
