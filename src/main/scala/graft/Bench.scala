@@ -1,11 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.engine.Conf
+import org.apache.spark.sql.{GraftBus, SparkSession}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.LongAdder
 
 /** Benchmark main: runs every judged query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line with total + per-query seconds, plus per-query
   * executor TASK time and in-task GC time ("task"/"gc" maps).
+  *
+  * Usage: runMain graft.Bench [<name>,<name>...]. The optional argument
+  * is a comma-separated query-name filter (the form Verify's third
+  * argument takes; an unknown name fails before anything runs): the
+  * same per-query protocol runs on just those names, so a filtered
+  * figure is the one the full record would carry — the tool for
+  * re-timing a suspect query in isolation. A filtered record is
+  * written only to an explicit SPARK_GRAFT_BENCH_OUT; otherwise it is
+  * printed to stdout alone, so it can never overwrite the committed
+  * bench_out.json. The session is [[engine.Conf]]'s at
+  * SPARK_GRAFT_CPUS cores (default 4).
   *
   * The task-time column exists because wall time on a shared host
   * carries a ±2× noise band (BENCH_NOTES.md round-7 characterization):
@@ -129,8 +141,8 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    val only: Option[Set[String]] = args.headOption.map(SparkEntry.names)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val deadlineSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_DEADLINE_SEC", "2400").toDouble
     val hardDeadlineSec =
@@ -138,23 +150,7 @@ object Bench {
         .getOrElse(deadlineSec + 180.0)
     val mainT0 = System.nanoTime()
     def elapsed(): Double = (System.nanoTime() - mainT0) / 1e9
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing respects the advisory partition size instead of
-      // keeping one post-shuffle partition per core: Spark's own docs
-      // recommend false in production ("it's recommended to set this
-      // config to false and respect the advisory size"), at 100 TB it
-      // yields advisory-sized (64MB default) reduce partitions rather
-      // than core-count-many slivers, and on the sub-second bench tier
-      // it coalesces kilobyte shuffles to ONE reduce task (measured
-      // 5-12% off the fixed per-query exec cost, OverheadProbe r16).
-      // Scale-adaptive by construction, not a local[8] tune.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Conf.builder(Conf.cpus, "graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val taskMs = new LongAdder; val gcMs = new LongAdder
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -163,46 +159,11 @@ object Bench {
         if (m != null) { taskMs.add(m.executorRunTime); gcMs.add(m.jvmGCTime) }
       }
     })
-    // listener events post asynchronously and the bus-drain API is
-    // private[spark] — but Scala package-private compiles to public
-    // bytecode, so LiveListenerBus.waitUntilEmpty() (the idiom Spark's
-    // own listener tests use after an action) is reachable by plain
-    // reflection: it blocks until every posted event is dispatched to
-    // every queue, i.e. exact quiescence in microseconds instead of the
-    // old 2x25ms polled-sleep floor (which cost 50-75ms x ~2.5 timed
-    // executions x 1133 queries ~ 2.5min of suite elapsed — round 15
-    // verdict #2). Runs OUTSIDE the timed span either way, so wall
-    // numbers are unaffected; per-query task/gc become exact rather
-    // than "stable for two polls". Fallback (reflection or the wait
-    // itself failing, e.g. a wedged queue's 10s internal timeout): the
-    // old double-quiet poll loop, capped at 5s.
-    val busWait: Option[() => Unit] = BusDrain.waiter(spark)
-    def drainListener(): Unit = {
-      val ok = busWait.exists { w =>
-        try { w(); true } catch { case _: Throwable => false }
-      }
-      if (!ok) {
-        var prev = taskMs.sum + gcMs.sum
-        var quietRuns = 0
-        var waitedMs = 0
-        while (quietRuns < 2 && waitedMs < 5000) {
-          Thread.sleep(25)
-          waitedMs += 25
-          val cur = taskMs.sum + gcMs.sum
-          quietRuns = if (cur == prev) quietRuns + 1 else 0
-          prev = cur
-        }
-        if (quietRuns < 2)
-          System.err.println(
-            "[bench] listener drain capped at 5s; task/gc for the " +
-              "preceding query may be incomplete")
-      }
-    }
     // Warm the JVM + register views once so per-query numbers measure the
     // queries, not session bring-up (first action pays codegen warm-up).
     Tables.registerAll(spark, sfDir)
     spark.sql("SELECT count(*) FROM lineitem").collect()
-    drainListener() // quiet bus before the first reset
+    GraftBus.drain(spark) // quiet bus before the first reset
 
     // One timed execution: reset adders (bus is quiet — the previous
     // timing's post-drain guarantees it), run through the noop sink,
@@ -221,7 +182,10 @@ object Bench {
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
-        drainListener()
+        // listener events post asynchronously: drain the bus (outside
+        // the timed span) before reading the adders, so task/gc are
+        // exact; a wedged bus throws and the query is recorded failed
+        GraftBus.drain(spark)
         System.err.println(
           f"[bench] t=${elapsed()}%.1fs $pass $name wall=$wall%.3f")
         Timing(wall, taskMs.sum / 1e3, gcMs.sum / 1e3)
@@ -257,6 +221,7 @@ object Bench {
       if (prior.isEmpty) 0.0
       else { val v = prior.values.toArray.sorted; v(v.length / 2) }
     val names = SparkEntry.queries.toSeq
+      .filter { case (n, _) => only.forall(_.contains(n)) }
       .sortBy { case (n, _) => (prior.getOrElse(n, defaultPrior), n) }
     System.err.println(s"[bench] order=cost_prior prior_n=${prior.size} " +
       s"catalog_n=${names.size} deadline=${deadlineSec}s " +
@@ -268,7 +233,9 @@ object Bench {
     val degradedQs = scala.collection.mutable.ArrayBuffer[String]()
     val skippedQs = scala.collection.mutable.ArrayBuffer[String]()
     val p2bSkipped = scala.collection.mutable.ArrayBuffer[String]()
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+    // a filtered run never writes the default record file
+    val outPath: Option[String] = sys.env.get("SPARK_GRAFT_BENCH_OUT")
+      .orElse(if (only.isEmpty) Some("bench_out.json") else None)
 
     def jlist(xs: Seq[String]): String =
       xs.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -307,7 +274,7 @@ object Bench {
         s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},""" +
           s""""task_total":$totalTask,${attribution(jlistCapped(_))},"sf":"$sfDir",""" +
           s""""queries":$top10,"queries_is_top10":true,""" +
-          s""""full_record":"$outPath"}"""
+          s""""full_record":"${outPath.getOrElse("stdout")}"}"""
       (full, tiny)
     }
     // Written ATOMICALLY (temp file + rename) so a killed or crashing
@@ -317,9 +284,9 @@ object Bench {
     // number — any recorded total must be read FROM it, never
     // transcribed from the console (round-3/4 drift: cited totals
     // disagreed with the tree's file).
-    def writeRecord(json: String): Unit = {
+    def writeRecord(json: String): Unit = outPath.foreach { path =>
       try {
-        val target = java.nio.file.Paths.get(outPath)
+        val target = java.nio.file.Paths.get(path)
         val dir = Option(target.toAbsolutePath.getParent)
           .getOrElse(java.nio.file.Paths.get("."))
         val tmp = java.nio.file.Files.createTempFile(dir, ".bench_out", ".tmp")
@@ -328,7 +295,7 @@ object Bench {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       } catch { case e: Exception =>
-        System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
+        System.err.println(s"[bench] could not write $path: ${e.getMessage}")
       }
     }
     def checkpointNow(): Unit = {

@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.engine.Conf
+import org.apache.spark.sql.{GraftBus, SparkSession}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import java.util.concurrent.atomic.LongAdder
 
@@ -25,17 +26,10 @@ import java.util.concurrent.atomic.LongAdder
 object OverheadProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "3").toInt
     // SPARK_GRAFT_PROBE_CONF="k=v;k=v" — extra session confs, so config
     // candidates (guide §1.2 step 3) can be A/B'd without recompiling
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench: advisory-size-respecting AQE coalescing
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = Conf.builder(Conf.cpus, "graft-overheadprobe")
     sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       builder.config(k.trim, v.trim)
@@ -46,9 +40,6 @@ object OverheadProbe {
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = jobs.add(1)
     })
-    val busWait = BusDrain.waiter(spark)
-    def drain(): Unit = busWait.foreach(w =>
-      try w() catch { case _: Throwable => () })
     Tables.registerAll(spark, sfDir)
     spark.sql("SELECT count(*) FROM lineitem").collect()
 
@@ -58,7 +49,7 @@ object OverheadProbe {
       var bBuild, bPlan, bExec = Double.MaxValue
       var bJobs = Long.MaxValue
       for (_ <- 1 to reps) {
-        drain()
+        GraftBus.drain(spark)
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val tBuild = ms(t0)
@@ -69,7 +60,7 @@ object OverheadProbe {
         val t2 = System.nanoTime()
         df.write.format("noop").mode("overwrite").save()
         val tExec = ms(t2)
-        drain()
+        GraftBus.drain(spark)
         val nJobs = jobs.sum
         bBuild = math.min(bBuild, tBuild); bPlan = math.min(bPlan, tPlan)
         bExec = math.min(bExec, tExec); bJobs = math.min(bJobs, nJobs)

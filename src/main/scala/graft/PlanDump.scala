@@ -1,13 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.engine.Conf
 
 /** Plan-dump tool (optimization rounds): writes `.explain("formatted")`
   * output for the named queries to `<outDir>/<name>_<tag>.txt`, so plan
   * claims in OPTIMIZATION notes are checkable without running Spark.
   *
   * Usage: runMain graft.PlanDump <outDir> <tag> <name>[,<name>...]
-  * Session config matches Bench (same master/shuffle-partition shape),
-  * so the dumped plan is the one the bench would execute. Queries whose
+  * The session is [[engine.Conf]]'s, like Bench's, so the dumped plan
+  * is the one the bench would execute. Queries whose
   * construction runs driver-side preparation (staged profiles, fitted
   * models) pay it here too — plans are dumped AFTER one full execution
   * through the noop sink, so operator-pinned caches are in the state
@@ -21,14 +21,7 @@ object PlanDump {
     val tag = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench: advisory-size-respecting AQE coalescing
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Conf.builder(Conf.cpus, "graft-plandump").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.registerAll(spark, sfDir)
     for (n <- names) {

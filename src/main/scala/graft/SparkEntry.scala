@@ -27,6 +27,18 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Q.toQueries(catalog)
 
+  /** The query-name filter `Verify` and `Bench` take: comma-separated
+    * names, each of which must be in [[queries]] — a misspelt name fails
+    * here, before anything runs, instead of selecting nothing. */
+  def names(filter: String): Set[String] = {
+    val asked = filter.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    require(asked.nonEmpty, s"empty query-name filter '$filter'")
+    val unknown = asked -- queries.keySet
+    require(unknown.isEmpty,
+      s"unknown query names: ${unknown.toSeq.sorted.mkString(",")}")
+    asked
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.engine.Conf
+import org.apache.spark.sql.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Stage-level attribution probe (optimization rounds): runs the named
@@ -13,14 +14,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 object StageProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench: advisory-size-respecting AQE coalescing
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Conf.builder(Conf.cpus, "graft-stageprobe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     @volatile var capture = false
@@ -37,15 +31,6 @@ object StageProbe {
               f"out=${m.outputMetrics.recordsWritten}%10d  ${si.name.takeWhile(_ != '\n')}")
         }
     })
-    // exact bus drain on BOTH edges of the capture window: without the
-    // leading-edge drain, late-dispatching cold-run stage-completed
-    // events were attributed to the warm run (round-15 advice item);
-    // the old trailing sleep(1500) only guarded the tail
-    val busWait = BusDrain.waiter(spark)
-    def drain(): Unit =
-      if (!busWait.exists(w => try { w(); true }
-                              catch { case _: Throwable => false }))
-        Thread.sleep(1500)
     Tables.registerAll(spark, sfDir)
     spark.sql("SELECT count(*) FROM lineitem").collect()
     for (q <- args) {
@@ -53,12 +38,12 @@ object StageProbe {
       def once(): Unit =
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       once() // p1 cold: caches built, not captured
-      drain() // cold-run events must land BEFORE capture flips on
+      GraftBus.drain(spark) // cold-run events must land BEFORE capture flips on
       capture = true
       val t0 = System.nanoTime()
       once() // p2 warm: captured
       val wall = (System.nanoTime() - t0) / 1e9
-      drain() // warm-run events must land before capture flips off
+      GraftBus.drain(spark) // warm-run events must land before capture flips off
       capture = false
       println(s"==== $q warm wall=" + f"$wall%.2f" + "s ====")
       stages.forEach(s => println(s))

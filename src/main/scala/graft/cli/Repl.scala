@@ -54,9 +54,8 @@ object Repl {
     // enriched by -v — the reference's silent/verbose modes
     // (localsql.py:57-64, :306-309)
     def eprint(msg: => String): Unit = if (!silent) println(msg)
-    val base = Session.local("graft-repl")
-    if (verbose) base.spark.sparkContext.setLogLevel("INFO")
-    val session = new Session(base.spark, jsonNormalize = jsonNormalize)
+    val session = Session.local("graft-repl", jsonNormalize)
+    if (verbose) session.spark.sparkContext.setLogLevel("INFO")
     startup(session, files, dir, recursive, verbose,
       haveQuery = query.nonEmpty, eprint)
 

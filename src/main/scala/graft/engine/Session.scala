@@ -16,10 +16,15 @@ import graft.ingest.{Discover, Naming, Readers}
   * A directory's files load concurrently (each file's reader and schema
   * inference overlap the others') and register in discovery order, so
   * the catalog is the one a file-by-file load gives.
+  *
+  * Every Session speaks the SQLite dialect: its constructor registers
+  * [[Dialect]] on `spark` (idempotent).
   */
 class Session(val spark: SparkSession,
               stringifyNested: Boolean = true,
               jsonNormalize: Boolean = false) {
+
+  Dialect.register(spark)
 
   /** name -> DataFrame, like the reference's self.tables (ref :31). */
   val tables = scala.collection.mutable.LinkedHashMap.empty[String, DataFrame]
@@ -111,26 +116,12 @@ object Session {
     * load fails instead of hanging the REPL. */
   private val LoadWithin: FiniteDuration = 1.hour
 
-  /** Standard builder: local[*] with shuffle partitions sized to cores
-    * (32 on the test box; a real cluster tunes this to 2-3x total
-    * cores), UTC session time. */
-  def local(appName: String = "graft"): Session = {
-    val cores = Runtime.getRuntime.availableProcessors.toString
-    val spark = SparkSession.builder()
-      .appName(appName)
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      // AQE coalescing respects the advisory partition size (Spark's
-      // documented production recommendation; see Bench.scala) —
-      // advisory-sized reduce partitions at scale, one reduce task for
-      // kilobyte shuffles locally
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+  /** A session on [[Conf]]'s runtime at one core per available
+    * processor. */
+  def local(appName: String = "graft", jsonNormalize: Boolean = false): Session = {
+    val spark = Conf.builder(Runtime.getRuntime.availableProcessors, appName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Dialect.register(spark)
-    new Session(spark)
+    new Session(spark, jsonNormalize = jsonNormalize)
   }
 }

@@ -634,7 +634,7 @@ object Dedup {
     * split sides with one doc_id-keyed flag join. The flag join and
     * the per-doc rollup share the doc_id key, so the split costs no
     * extra shuffle stage beyond what the rollup already pays.
-    * Measured at sf0.1 (BenchOne task column): total task time floor
+    * Measured at sf0.1 (isolated-run task column): total task time floor
     * 29.5 s (two-pass form) → 11.9 s warm / 18.3 s cold. */
   def ngramOverlapSplit(docs: DataFrame, isEval: Column): DataFrame = {
     val side = docs.select(col("doc_id"), isEval.as("is_eval"))

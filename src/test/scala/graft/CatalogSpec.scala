@@ -1,11 +1,9 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Catalog integrity: SparkEntry.queries is a Map, so a duplicated
   * query name would SILENTLY drop one implementation (and the driver
   * would never notice the missing row). Guard the invariant here. */
-class CatalogSpec extends AnyFunSuite {
+class CatalogSpec extends SparkSpec {
 
   test("no query-name collisions; every query has a well-formed name") {
     val names = (queries.Relational.qs ++ queries.Windows.qs ++
@@ -25,12 +23,17 @@ class CatalogSpec extends AnyFunSuite {
   test("the driver's flagship smoke-check contract holds: entry() returns rows") {
     // the driver calls SparkEntry.entry(spark) directly and requires
     // rows > 0 on sf0.001; nothing else exercises that exact code path
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("graft-entry-smoke")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  test("a query-name filter with an unknown name fails and lists the unknown names") {
+    val name = SparkEntry.queries.keys.min
+    assert(SparkEntry.names(s" $name,$name ") == Set(name))
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.names(s"$name,no_such_query,also_missing")
+    }
+    assert(e.getMessage.endsWith("unknown query names: also_missing,no_such_query"), e.getMessage)
+    intercept[IllegalArgumentException](SparkEntry.names(","))
   }
 
   test("every query has an oracle — the rows-only set is empty") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.engine.Conf
 
 /** The spark.sql.extensions packaging path: a session built with
   * GraftExtensions resolves float_dot/quant_dot in pure SQL, no
@@ -12,9 +13,7 @@ class GraftExtensionsSpec extends SparkSpec {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.ui.enabled", "false")
+      val s = Conf.builder(4, "graft-extensions")
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       val r = s.sql(

@@ -593,7 +593,7 @@ class PlanSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       SparkEntry.queries("x328_kcore_trajectory")(spark, dir).collect()
-      BusDrain.waiter(spark).foreach(_())
+      org.apache.spark.sql.GraftBus.drain(spark)
     } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
     val all = plans.asScala.mkString("\n")

@@ -1,7 +1,7 @@
 package graft.cli
 
 import graft.SparkSpec
-import graft.engine.{Dialect, Session}
+import graft.engine.Session
 
 /** The reference README's five golden sessions
   * (/root/reference/README.md:42-116) replayed end-to-end through
@@ -50,10 +50,8 @@ class ReplGoldenSpec extends SparkSpec {
     d
   }
 
-  private def freshSession(jn: Boolean = false): Session = {
-    Dialect.register(spark)
+  private def freshSession(jn: Boolean = false): Session =
     new Session(spark, jsonNormalize = jn)
-  }
 
   /** Exact-diff up to trailing spaces: Spark's show pads cells to the
     * column width, so every data line carries trailing blanks that no

@@ -5,7 +5,7 @@ import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.concurrent.Eventually._
-import graft.{BusDrain, SparkSpec}
+import graft.SparkSpec
 
 /** [[Par]]: input order, failure and timeout semantics, inherited local
   * properties, and the source rule that it is the engine's only pool. */
@@ -86,7 +86,7 @@ class ParSpec extends SparkSpec {
     try {
       val counts = Par.map(spark, Seq(10L, 20L, 30L), 60.seconds)(n => spark.range(n).count())
       assert(counts == Seq(10L, 20L, 30L))
-      BusDrain.waiter(spark).foreach(_())
+      org.apache.spark.sql.GraftBus.drain(spark)
       assert(groups.size >= 3)
       assert(groups.asScala.forall(_ == "par-spec-group"), groups)
       assert(tags.asScala.forall(_.contains("graft-par-")), tags)

@@ -8,10 +8,7 @@ import graft.io.Save
   * -> SQL (the reference's golden sessions, README.md:42-116) -> export. */
 class SessionSpec extends SparkSpec {
 
-  private def freshSession(): Session = {
-    Dialect.register(spark)
-    new Session(spark)
-  }
+  private def freshSession(): Session = new Session(spark)
 
   private def loadFixtures(s: Session): java.nio.file.Path = {
     val d = tmpDir()
@@ -71,6 +68,14 @@ class SessionSpec extends SparkSpec {
     assert(!r.getAs[Boolean]("g2"))
     assert(r.getAs[String]("q") == "'it''s'")
     assert(math.abs(r.getAs[Double]("jd") - 2440588.0) < 1e-9)
+  }
+
+  test("a Session registers the dialect on a bare SparkSession") {
+    val bare = spark.newSession()
+    val r = new Session(bare).sql("SELECT typeof(1L) AS t, glob('hello', 'h*o') AS g").head
+    assert(r.getString(0) == "integer") // Spark's own typeof says "bigint"
+    assert(r.getBoolean(1))
+    assert(bare.experimental.extraOptimizations.contains(graft.plans.GlobToRLike))
   }
 
   test("groupsFrame: GROUPS BETWEEN 1 PRECEDING AND 1 FOLLOWING, hand-computed with ties") {
