@@ -2,6 +2,8 @@ package graft.engine
 
 import scala.concurrent.duration._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import graft.ingest.{Discover, Naming, Readers}
 
 /** Engine session: file catalog + SQL passthrough — the Spark-native
@@ -11,7 +13,12 @@ import graft.ingest.{Discover, Naming, Readers}
   * Where the reference copies every referenced table into a fresh
   * SQLite DB per query (its core scalability wall, ref :230), here a
   * table is a lazily-planned temp view over the file: zero copies,
-  * and Catalyst pushes filters/pruning into the scan.
+  * and Catalyst pushes filters/pruning into the scan. A file of at
+  * most Spark's split floor (`min(maxPartitionBytes, openCostInBytes)`,
+  * 4 MB by default) is registered as one partition: the file planner
+  * scans it as one task anyway, so this is exact, and a statement over
+  * such files plans no shuffle — the reference's one-process answer,
+  * kept lazy ([[Session.onePartitionIfSmall]]).
   *
   * A directory's files load concurrently (each file's reader and schema
   * inference overlap the others') and register in discovery order, so
@@ -47,7 +54,8 @@ class Session(val spark: SparkSession,
     * messages are those of loading the files one after another. */
   def loadFiles(paths: Seq[String]): Seq[Option[String]] = {
     val read = Par.map(spark, paths, Session.LoadWithin) { p =>
-      try Right(Readers.read(spark, p, stringifyNested, jsonNormalize))
+      try Right(Readers.read(spark, p, stringifyNested, jsonNormalize)
+        .map(Session.onePartitionIfSmall(spark, _)))
       catch { case e: Exception => Left(e) }
     }
     paths.zip(read).map { case (path, r) =>
@@ -115,6 +123,33 @@ object Session {
     * whole directory that has not finished in an hour is wedged, and the
     * load fails instead of hanging the REPL. */
   private val LoadWithin: FiniteDuration = 1.hour
+
+  /** `df` as one partition when its scan is one file of at most
+    * `min(maxPartitionBytes, openCostInBytes)` bytes, or local rows
+    * (XLSX) of that size; else `df` unchanged.
+    *
+    * Spark's file planner never cuts a split smaller than that floor
+    * (`FilePartition.maxSplitBytes`), so such a file already scans as
+    * one task, and the narrow, shuffle-free `coalesce(1)` only tells the
+    * planner so; local rows, already in memory, merge into that one
+    * task the same way. `SinglePartition` then satisfies every aggregate,
+    * window, global-sort and join distribution above it: no exchange and
+    * no range-sample job. Filter and Project still push through the
+    * coalesce into the scan. */
+  private[engine] def onePartitionIfSmall(spark: SparkSession, df: DataFrame): DataFrame = {
+    val conf = spark.sessionState.conf
+    val floor = math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
+    val bytes = df.queryExecution.analyzed.collectLeaves() match {
+      case Seq(l: LogicalRelation) => l.relation match {
+        case fs: HadoopFsRelation if fs.location.inputFiles.length == 1 =>
+          Some(BigInt(fs.location.sizeInBytes))
+        case _ => None
+      }
+      case Seq(l: LocalRelation) => Some(l.stats.sizeInBytes)
+      case _ => None
+    }
+    if (bytes.exists(_ <= floor)) df.coalesce(1) else df
+  }
 
   /** A session on [[Conf]]'s runtime at one core per available
     * processor. */

@@ -112,9 +112,11 @@ object Readers {
       case other => throw new IllegalArgumentException(
         s"unsupported compression: $other")
     }
+    // the file backs a lazily read table for the rest of the JVM's life
     val tmp = Files.createTempFile("graft_unpack", suffix)
-    Files.copy(in, tmp, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    in.close()
+    tmp.toFile.deleteOnExit()
+    try Files.copy(in, tmp, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    finally in.close()
     tmp.toString
   }
 }

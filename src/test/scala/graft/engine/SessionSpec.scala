@@ -1,12 +1,19 @@
 package graft.engine
 
 import scala.jdk.CollectionConverters._
+import scala.util.chaining._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Repartition
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import graft.SparkSpec
+import graft.ingest.{Discover, Naming, Readers}
 import graft.io.Save
 
 /** End-to-end engine flow over README-shaped fixtures: load -> register
   * -> SQL (the reference's golden sessions, README.md:42-116) -> export. */
-class SessionSpec extends SparkSpec {
+class SessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def freshSession(): Session = new Session(spark)
 
@@ -194,9 +201,10 @@ class SessionSpec extends SparkSpec {
     assert(loaded == Seq("good_csv"))
   }
 
-  test("loadDir registers like a serial loadFile loop over Discover.inDir") {
+  /** One file of each ingest kind: CSV, gzip CSV, NDJSON, a JSON array
+    * and XLSX. */
+  private def writeIngestFixture(d: java.nio.file.Path): Unit = {
     import spark.implicits._
-    val d = tmpDir()
     writeFile(d, "csv.csv", "id,b,c\n1,4,7\n2,5,8\n3,6,9\n")
     val gz = new java.util.zip.GZIPOutputStream(
       java.nio.file.Files.newOutputStream(d.resolve("zipped.csv.gz")))
@@ -208,6 +216,12 @@ class SessionSpec extends SparkSpec {
       |]""".stripMargin)
     graft.ingest.Xlsx.write(Seq((1L, "p"), (2L, "q")).toDF("id", "s"),
       d.resolve("sheet.xlsx").toString)
+  }
+
+  test("loadDir registers like a serial loadFile loop over Discover.inDir") {
+    import spark.implicits._
+    val d = tmpDir()
+    writeIngestFixture(d)
     writeFile(d, "bad.xlsx", "this is not a zip")
     writeFile(d, "skip.txt", "not a known format")
     // both map to a_b_csv; discovery order puts a_b.csv last, so it wins
@@ -241,5 +255,118 @@ class SessionSpec extends SparkSpec {
     assert(rows(conc) == rows(serial))
     assert(concSkips.size == 1 && concSkips.head.contains("bad.xlsx"), concSkips)
     assert(concSkips == serialSkips)
+  }
+
+  // ---- small files open as one-partition tables ----------------------
+
+  /** Collects `df`; its rows and the shuffles of its final (AQE) plan. */
+  private def run(df: DataFrame): (Seq[org.apache.spark.sql.Row], Seq[ShuffleExchangeExec]) = {
+    val rows = df.collect().toSeq
+    (rows, collectWithSubqueries(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e
+    })
+  }
+
+  /** The files of `d` as plain [[Readers.read]] views on a fresh session. */
+  private def plainViews(d: java.nio.file.Path): SparkSession = {
+    val plain = spark.newSession()
+    Discover.inDir(d.toString).map(_.toString).foreach { f =>
+      Readers.read(plain, f).foreach(_.createOrReplaceTempView(Naming.tableName(f)))
+    }
+    plain
+  }
+
+  private def coalesced(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.exists(_.isInstanceOf[Repartition])
+
+  /** `d` loaded by a Session on a new SparkSession with `conf` set; the
+    * shared session's conf is never changed. */
+  private def loadedWith(d: java.nio.file.Path, conf: (String, String)*): Session = {
+    val own = spark.newSession()
+    conf.foreach { case (k, v) => own.conf.set(k, v) }
+    new Session(own).tap(_.loadDir(d.toString))
+  }
+
+  private val smallFileSql = Seq(
+    "filter + ORDER BY" ->
+      "SELECT id, b, c FROM csv_csv WHERE c >= 8 ORDER BY b DESC",
+    "aggregate + ORDER BY" ->
+      "SELECT c IS NULL AS no_c, count(*) AS k, sum(id) AS s FROM array_json GROUP BY 1 ORDER BY 1",
+    "broadcast join + aggregate" ->
+      """SELECT x.s, count(*) AS k, sum(c.b) AS sb, max(z.v) AS mv FROM csv_csv c
+        |JOIN sheet_xlsx x ON c.id = x.id JOIN zipped_csv_gz z ON z.id = c.id
+        |GROUP BY x.s ORDER BY x.s""".stripMargin,
+    "row_number window" ->
+      """SELECT id, n, row_number() OVER (PARTITION BY id % 2 ORDER BY id DESC) AS rn
+        |FROM lines_json ORDER BY id""".stripMargin)
+
+  test("small files open as one partition: same rows as plain views, no shuffle") {
+    val d = tmpDir()
+    writeIngestFixture(d)
+    val s = freshSession()
+    s.loadDir(d.toString)
+    assert(s.tables.values.forall(coalesced))
+    val plain = plainViews(d)
+    for ((what, q) <- smallFileSql) {
+      val (rows, shuffles) = run(s.sql(q))
+      val (plainRows, plainShuffles) = run(plain.sql(q))
+      assert(rows.nonEmpty && rows == plainRows, what)
+      assert(shuffles.isEmpty, s"$what: ${s.sql(q).queryExecution.executedPlan}")
+      assert(plainShuffles.nonEmpty, what)
+    }
+    val join = s.sql(smallFileSql(2)._2)
+    join.collect()
+    assert(collectWithSubqueries(join.queryExecution.executedPlan) {
+      case j: BroadcastHashJoinExec => j
+    }.size == 2)
+    // the filter still reaches the scan through the coalesce
+    val filter = s.sql(smallFileSql.head._2).queryExecution.executedPlan.toString
+    assert(filter.contains("GreaterThanOrEqual(c,8)"), filter)
+  }
+
+  test("a file above the split floor keeps its partitions and exchanges") {
+    val d = tmpDir()
+    writeFile(d, "csv.csv", "id,b,c\n1,4,7\n2,5,8\n3,6,9\n")
+    val q = "SELECT b, count(*) AS k FROM csv_csv GROUP BY b ORDER BY b"
+    // the floor is openCostInBytes ...
+    val overOpenCost = loadedWith(d, "spark.sql.files.openCostInBytes" -> "16")
+    assert(!coalesced(overOpenCost.tables("csv_csv")))
+    val (rows, shuffles) = run(overOpenCost.sql(q))
+    assert(shuffles.nonEmpty)
+    assert(rows == run(plainViews(d).sql(q))._1)
+    // ... or maxPartitionBytes when that is lower
+    val overMaxPartition = loadedWith(d, "spark.sql.files.maxPartitionBytes" -> "16")
+    assert(!coalesced(overMaxPartition.tables("csv_csv")))
+    // the shared session keeps its floor
+    assert(coalesced(freshSession().tap(_.loadDir(d.toString)).tables("csv_csv")))
+  }
+
+  test("a zip is gated on its unpacked size, not the archive's") {
+    val d = tmpDir()
+    val csv = "id,v\n" + (1 to 400).map(i => s"$i,same\n").mkString
+    val zip = new java.util.zip.ZipOutputStream(
+      java.nio.file.Files.newOutputStream(d.resolve("big.csv.zip")))
+    zip.putNextEntry(new java.util.zip.ZipEntry("big.csv"))
+    zip.write(csv.getBytes("UTF-8")); zip.close()
+    val archive = java.nio.file.Files.size(d.resolve("big.csv.zip"))
+    val floor = (archive + csv.length) / 2
+    assert(archive < floor && floor < csv.length)
+    val s = loadedWith(d, "spark.sql.files.openCostInBytes" -> floor.toString)
+    assert(!coalesced(s.tables("big_csv_zip")))
+    assert(s.sql("SELECT count(*) FROM big_csv_zip").head.getLong(0) == 400L)
+    assert(coalesced(freshSession().tap(_.loadDir(d.toString)).tables("big_csv_zip")))
+  }
+
+  test("catalog tables and pins are not coalesced") {
+    val d = tmpDir()
+    // one small file: the size gate alone would pass it
+    spark.range(10).toDF("r_regionkey").coalesce(1)
+      .write.parquet(graft.Tables.path(d.toString, "region"))
+    assert(!coalesced(graft.Tables.load(spark, d.toString, "region")))
+    val pinned = graft.ext.CacheRegistry.pin(spark.range(0, 100, 1, 4).toDF("id"))
+    try {
+      assert(!coalesced(pinned))
+      assert(pinned.rdd.getNumPartitions == 4)
+    } finally graft.ext.CacheRegistry.release(pinned)
   }
 }
