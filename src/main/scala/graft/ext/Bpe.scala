@@ -22,9 +22,10 @@ import org.apache.spark.sql.types._
   *    argmax pair — the only driver traffic, k rows total — and (c) a
   *    narrow per-row re-segmentation map (whole-stage codegen'd
   *    `aggregate` fold, no UDF);
-  *  - the evolving vocabulary frame is locally CHECKPOINTED each round
-  *    ([[CacheRegistry.checkpoint]]) so lineage stays flat across
-  *    iterations, and the superseded frontier is released eagerly.
+  *  - the rounds run on [[CacheRegistry.iterate]]: the evolving
+  *    vocabulary frame is locally checkpointed each round so lineage
+  *    stays flat across iterations, and the superseded frame is
+  *    released eagerly.
   *
   * At 100 TB the word-frequency table is still only vocabulary-sized
   * (tens of millions of rows at web scale), so the k iterations cost k
@@ -96,13 +97,13 @@ object Bpe {
         s"regexp_extract_all(lower($textCol), '[a-z0-9]+', 0)")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
     // initial segmentation: one symbol per character
-    var cur = CacheRegistry.checkpoint(words.select(
+    val init = CacheRegistry.checkpoint(words.select(
       trim(regexp_replace(col("word"), "(.)", "$1 ")).as("s"), col("freq")))
 
     val merges = Seq.newBuilder[(Int, String, String, Long)]
-    var it = 0
-    var exhausted = false
-    while (it < k && !exhausted) {
+    // round r learns merge r; the segmentation after merge k is never
+    // read, so round k declines to build it
+    val (last, _) = CacheRegistry.iterate(init, k) { (cur, r) =>
       // adjacent-pair counts over the vocabulary (weighted by word freq)
       val best = cur
         .select(col("freq"), split(col("s"), " ").as("a"))
@@ -114,20 +115,15 @@ object Bpe {
         .agg(sum("freq").as("cnt"))
         .orderBy(col("cnt").desc, col("l"), col("r"))
         .limit(1)
-        .collect() // exactly one row per iteration, k rows total
-      if (best.isEmpty) exhausted = true
-      else {
-        val (l, r, cnt) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += ((it + 1, l, r, cnt))
-        val next = CacheRegistry.checkpoint(
-          cur.select(mergeFold(col("s"), l, r).as("s"), col("freq")))
-        CacheRegistry.release(cur)
-        cur = next
-        it += 1
-      }
+        .collect() // exactly one row per round, k rows total
+        .headOption
+      best.foreach(b => merges += ((r, b.getString(0), b.getString(1),
+        b.getLong(2))))
+      best.filter(_ => r < k).map(b => cur.select(
+        mergeFold(col("s"), b.getString(0), b.getString(1)).as("s"),
+        col("freq")))
     }
-    CacheRegistry.release(cur)
+    Seq(init, last).foreach(CacheRegistry.release)
 
     val schema = StructType(Seq(
       StructField("merge_rank", IntegerType, nullable = false),

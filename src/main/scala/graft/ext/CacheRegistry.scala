@@ -28,11 +28,11 @@ object CacheRegistry {
 
   /** Eagerly local-checkpoint df — materialize it and TRUNCATE its
     * lineage — and remember the persisted checkpoint RDD for
-    * [[clearAll]]. This is the tool for iterative operators
-    * (Dedup.clusters): a cache alone keeps the logical plan growing
-    * (analysis cost compounds per round), while a checkpoint resets it
-    * to a leaf scan. The backing blocks outlive the returned DataFrame
-    * until released, hence the registry.
+    * [[clearAll]]. Iterative operators get it through [[iterate]]: a
+    * cache alone keeps the logical plan growing (analysis cost
+    * compounds per round), while a checkpoint resets it to a leaf scan.
+    * The backing blocks outlive the returned DataFrame until released,
+    * hence the registry.
     *
     * After clearAll the returned DataFrame is UNRECOVERABLE (its
     * lineage is gone with the blocks) — callers must fully consume it
@@ -46,12 +46,12 @@ object CacheRegistry {
   }
 
   /** Unpersist and forget ONE checkpointed or pinned DataFrame — for
-    * iterative operators that supersede a frontier mid-workload
-    * (Dedup.clusters, the per-round generations of Graph.Loop):
-    * without eager release, persisted blocks grow O(rounds * corpus)
-    * until clearAll. A pin is matched by REFERENCE (the exact DataFrame
-    * handed back by [[pin]]); a checkpoint by its backing RDD. A df
-    * that was never registered (or already released) is a no-op.
+    * operators done with a frame mid-workload: [[iterate]] releases each
+    * superseded generation, without which persisted blocks grow
+    * O(rounds * corpus) until clearAll. A pin is matched by REFERENCE
+    * (the exact DataFrame handed back by [[pin]]); a checkpoint by its
+    * backing RDD. A df that was never registered (or already released)
+    * is a no-op.
     *
     * Cluster-deployment caveat (same hazard class for both kinds): a
     * released frame's blocks are gone and a pin whose lineage roots in
@@ -70,6 +70,38 @@ object CacheRegistry {
         if (checkpointed.remove(rdd)) { rdd.unpersist(blocking = false); () }
       }
     }
+  }
+
+  /** The round kernel of every loop that carries its state from round
+    * to round in checkpointed generations (Graph.Loop,
+    * Graph.harmonicCentralityBounded, Dedup.propagateMinLabels,
+    * Bpe.learnMerges, Similarity.kCenterSelect).
+    *
+    * Runs `step(cur, round)` from `init` for rounds 1, 2, … until the
+    * step declines a round (None) or `maxRounds` rounds have run. Each
+    * generation built before round `maxRounds` — one a later round can
+    * read — is eagerly checkpointed (lineage and analysis cost stay
+    * flat), and only then is its parent released. `init` stays the
+    * caller's. A generation built in round `maxRounds` comes back
+    * unmaterialized, reading its still-registered parent; a caller that
+    * needs its last generation materialized asks for one more round and
+    * declines it. Returns the last generation and the rounds that built
+    * one. */
+  private[ext] def iterate(init: DataFrame, maxRounds: Int)(
+      step: (DataFrame, Int) => Option[DataFrame]): (DataFrame, Int) = {
+    require(maxRounds >= 0, s"maxRounds must be >= 0; got $maxRounds")
+    @annotation.tailrec
+    def go(cur: DataFrame, done: Int): (DataFrame, Int) =
+      if (done == maxRounds) (cur, done)
+      else step(cur, done + 1) match {
+        case None => (cur, done)
+        case Some(next) if done + 1 == maxRounds => (next, maxRounds)
+        case Some(next) =>
+          val child = checkpoint(next) // eager: materialized
+          if (done > 0) release(cur) // never init
+          go(child, done + 1)
+      }
+    go(init, 0)
   }
 
   /** Unpersist every pinned DataFrame and checkpoint RDD, and forget

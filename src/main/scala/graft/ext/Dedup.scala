@@ -855,11 +855,11 @@ object Dedup {
     * Each round is exactly ONE Spark job: the convergence test rides
     * the checkpoint's materialization as an observed metric
     * (`Dataset.observe` + CollectMetrics) instead of a separate
-    * join-and-count job — the update aggregation already sees each
-    * doc's previous label (the union branch tagged `own`), so the
-    * changed-row count is a free side-output. Superseded frontiers are
-    * released as soon as the next one materializes, so persisted blocks
-    * stay O(corpus), not O(rounds * corpus).
+    * join-and-count job — the update already sees each doc's previous
+    * label, so the changed-row count is a free side-output. The rounds
+    * run on [[CacheRegistry.iterate]]: superseded frontiers are released
+    * as soon as the next one materializes, so persisted blocks stay
+    * O(corpus), not O(rounds * corpus).
     *
     * PRECONDITION: every id in `pairs` (d1 AND d2) must appear in
     * `docs.doc_id`, and doc_id must be unique. The round-15 neighbor-
@@ -917,9 +917,11 @@ object Dedup {
 
   /** The shared min-label loop behind [[clusters]] and
     * [[clustersWarmStart]]; returns (labels ordered by doc_id, rounds
-    * run — including the final verify round that observes no change). */
-  private[ext] def propagateMinLabels(pairs: DataFrame,
-                                      init: DataFrame): (DataFrame, Int) = {
+    * run — including the final verify round that observes no change).
+    * `cap` is the broadcast gate on the arc count. */
+  private[ext] def propagateMinLabels(
+      pairs: DataFrame, init: DataFrame,
+      cap: Long = Graph.BroadcastNodeCap): (DataFrame, Int) = {
     // checkpoint the PAIR list before mirroring it: edges references the
     // pair subtree twice (forward + reversed), so this both truncates
     // the expensive candidate-generation lineage and keeps it from
@@ -933,46 +935,48 @@ object Dedup {
     // shuffles the label table on the join key (Graph.nodeSide
     // rationale; the groupBy below still shuffles labels by doc_id,
     // which is the state update itself)
-    val nArcs = 2L * fwd.count()
+    val nPairs = fwd.count()
+    val nArcs = 2L * nPairs
     val edges = Graph.nodeSide(
       fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"))),
-      nArcs)
-    var labels = CacheRegistry.checkpoint(init)
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0) {
-      rounds += 1
-      // per-node neighbor MINIMUM, bounded by the pair list and
-      // min-merged map-side — the round's only exchange carries one
-      // (node, min) row per map partition per touched node, never the
-      // label table. The old union formulation shuffled labels PLUS
-      // the neighbor observations by doc_id every round; here the
-      // label table is never shuffled at all in the broadcast regime
-      // (nbrMin rides the same nArcs gate as the edge side — it has at
-      // most one row per arc endpoint).
-      val nbrMin = Graph.nodeSide(
-        edges.join(labels, edges("dst") === labels("doc_id"))
-          .groupBy(col("src").as("doc_id"))
-          .agg(min("cluster_id").as("nbr")),
-        nArcs)
-      // least() skips the NULL nbr of isolated docs; init rows are
-      // unique by doc_id (documented fellegiSunter/clusters
-      // precondition), so the left join preserves cardinality exactly
-      // like the old per-doc groupBy did
-      val obs = org.apache.spark.sql.Observation()
-      val next = CacheRegistry.checkpoint(
-        labels.join(nbrMin, Seq("doc_id"), "left")
+      nArcs, cap)
+    // a component's diameter is at most its edge count, so round
+    // nPairs + 1 at the latest observes no change; the round after it
+    // only reads that observation, so every labelled round is checkpointed
+    val bound = math.min(nPairs + 1, Int.MaxValue - 1L).toInt
+    val init0 = CacheRegistry.checkpoint(init)
+    var obs = Option.empty[org.apache.spark.sql.Observation]
+    val (labels, rounds) = CacheRegistry.iterate(init0, bound + 1) { (cur, r) =>
+      if (obs.exists(_.get("changed") == 0L)) None
+      else if (r > bound) throw new IllegalStateException(
+        s"min-label propagation reached no fixpoint in $bound rounds")
+      else {
+        // per-node neighbor MINIMUM, bounded by the pair list and
+        // min-merged map-side — the round's only exchange carries one
+        // (node, min) row per map partition per touched node; the label
+        // table is never shuffled in the broadcast regime (nbrMin rides
+        // the same nArcs gate as the edge side — it has at most one row
+        // per arc endpoint).
+        val nbrMin = Graph.nodeSide(
+          edges.join(cur, edges("dst") === cur("doc_id"))
+            .groupBy(col("src").as("doc_id"))
+            .agg(min("cluster_id").as("nbr")),
+          nArcs, cap)
+        // least() skips the NULL nbr of isolated docs; init rows are
+        // unique by doc_id (documented fellegiSunter/clusters
+        // precondition), so the left join preserves cardinality
+        obs = Some(org.apache.spark.sql.Observation())
+        Some(cur.join(nbrMin, Seq("doc_id"), "left")
           .select(col("doc_id"),
             least(col("cluster_id"), col("nbr")).as("cluster_id"),
             col("cluster_id").as("_prev"))
-          .observe(obs,
+          .observe(obs.get,
             sum(when(col("cluster_id") =!= col("_prev"), 1L).otherwise(0L))
               .as("changed"))
           .select("doc_id", "cluster_id"))
-      changed = obs.get("changed").asInstanceOf[Long]
-      CacheRegistry.release(labels)
-      labels = next
+      }
     }
+    CacheRegistry.release(init0)
     (labels.orderBy("doc_id"), rounds)
   }
 

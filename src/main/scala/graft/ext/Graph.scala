@@ -74,9 +74,9 @@ object Graph {
     * if blocks are lost — one build for both regimes, so the over-cap
     * path runs the same arc code as the judged one.
     *
-    * ROUNDS: [[run]] checkpoints every generation a later round reads
-    * (lineage and analysis cost stay flat; unmaterialized rounds
-    * measured 8x slower on x169, the optimizer planning nested
+    * ROUNDS: [[run]] forwards to [[CacheRegistry.iterate]], which
+    * checkpoints every generation a later round reads (unmaterialized
+    * rounds measured 8x slower on x169, the optimizer planning nested
     * broadcasts that re-execute the chain) and releases the parent
     * generation only after the child has materialized. */
   private[ext] final class Loop private (
@@ -102,26 +102,9 @@ object Graph {
       remap(dict, df, cols, "gid", "name")
 
     /** Runs the loop's rounds of `step` from `init` and returns the last
-      * generation. Each generation a later round reads — and, when
-      * `observe` is given, every generation — is eagerly checkpointed
-      * and handed to `observe`; its parent is released only then. `init`
-      * stays the caller's, and so does an observed last generation. */
-    def run(init: DataFrame, observe: Option[DataFrame => Unit] = None)(
-        step: DataFrame => DataFrame): DataFrame = {
-      var cur = init
-      var parent: Option[DataFrame] = None
-      for (i <- 1 to rounds) {
-        cur = step(cur)
-        if (i < rounds || observe.isDefined) {
-          val child = CacheRegistry.checkpoint(cur) // eager: materialized
-          parent.foreach(CacheRegistry.release)
-          parent = Some(child)
-          cur = child
-          observe.foreach(_(child))
-        }
-      }
-      cur
-    }
+      * generation, unmaterialized ([[CacheRegistry.iterate]]). */
+    def run(init: DataFrame)(step: DataFrame => DataFrame): DataFrame =
+      CacheRegistry.iterate(init, rounds)((cur, _) => Some(step(cur)))._1
   }
 
   private[ext] object Loop {
@@ -431,18 +414,22 @@ object Graph {
       arcs.groupBy("src").agg(count(lit(1)).as("deg"))
     val deg0 = CacheRegistry.checkpoint(degrees(e))
     val traj = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    val last = loop.run(deg0, Some { (deg: DataFrame) =>
-      val row = deg.agg(count(lit(1)), sum(col("deg"))).head()
-      traj += ((traj.size + 1L, row.getLong(0),
-        if (row.isNullAt(1)) 0L else row.getLong(1)))
-      ()
-    }) { deg =>
-      val keep = deg.where(col("deg") >= k).select(col("src").as("node"))
-      degrees(e
-        .join(loop.side(keep.select(col("node").as("src"))),
-          Seq("src"), "left_semi")
-        .join(loop.side(keep.select(col("node").as("dst"))),
-          Seq("dst"), "left_semi"))
+    // round r reads round r-1's checkpointed degree table for its counts;
+    // round rounds+1 only counts, so every round's table is checkpointed
+    val (last, _) = CacheRegistry.iterate(deg0, rounds + 1) { (deg, r) =>
+      if (r > 1) {
+        val row = deg.agg(count(lit(1)), sum(col("deg"))).head()
+        traj += ((r - 1L, row.getLong(0),
+          if (row.isNullAt(1)) 0L else row.getLong(1)))
+      }
+      Option.when(r <= rounds) {
+        val keep = deg.where(col("deg") >= k).select(col("src").as("node"))
+        degrees(e
+          .join(loop.side(keep.select(col("node").as("src"))),
+            Seq("src"), "left_semi")
+          .join(loop.side(keep.select(col("node").as("dst"))),
+            Seq("dst"), "left_semi"))
+      }
     }
     Seq(e, deg0, last).foreach(CacheRegistry.release)
     traj.toSeq.toDF("round", "n_nodes", "n_arcs").orderBy("round")
@@ -618,13 +605,15 @@ object Graph {
     * is O(n·m) and unpayable, while hop-3 already separates hubs from
     * periphery on any small-world graph.
     *
-    * Scale shape: the frontier expansion is PROBE-KEYED — each round
-    * is one equi-join of the (probe, node) frontier against the arc
-    * list plus one anti-join against the visited set, so round d costs
-    * |probes| × (nodes within d hops), never the full n² BFS; the
-    * probe set is the sampling knob (the x382 hubness-audit
-    * discipline). Edges are symmetrized internally ([[kCoreTrajectory]]
-    * contract). Rounds are checkpointed with eager release.
+    * Scale shape: the expansion is PROBE-KEYED — one state table
+    * (probe, node, d) holds every node reached so far at its distance;
+    * round r joins the rows with d = r-1 against the arc list and
+    * anti-joins the state, so round r costs |probes| × (nodes within r
+    * hops), never the full n² BFS; the probe set is the sampling knob
+    * (the x382 hubness-audit discipline). Edges are symmetrized
+    * internally ([[kCoreTrajectory]] contract). The rounds run on
+    * [[CacheRegistry.iterate]], one checkpoint each; the counts are one
+    * aggregate over d.
     *
     * Output: (node, n1, n2, n3, harmonic_milli), probes with at least
     * one neighbor, ordered by node. */
@@ -635,49 +624,38 @@ object Graph {
         .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
         .distinct())
     val p0 = probes.select(col("node").as("probe"))
-    // visited starts as the probe itself (distance 0, not scored);
-    // each round's frontier stays pinned until the joined result
-    // materializes (a released local checkpoint cannot recompute)
-    var visited = CacheRegistry.checkpoint(
-      p0.select(col("probe"), col("probe").as("node")))
-    var frontier = visited
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val counts = (1 to 3).map { d =>
-      val next = CacheRegistry.checkpoint(
-        frontier.join(arcs, frontier("node") === arcs("src"))
+    // the probe itself is reached at distance 0 and never scored
+    val init = CacheRegistry.checkpoint(
+      p0.select(col("probe"), col("probe").as("node"), lit(0).as("d")))
+    // round 4 declines, so the kernel checkpoints round 3's state too
+    val (state, _) = CacheRegistry.iterate(init, 4) { (seen, r) =>
+      Option.when(r <= 3) {
+        val frontier = seen.where(col("d") === r - 1)
+        seen.unionByName(frontier
+          .join(arcs, frontier("node") === arcs("src"))
           .select(col("probe"), col("dst").as("node"))
           .distinct()
-          .join(visited, Seq("probe", "node"), "left_anti"))
-      rounds += next
-      val prevVisited = visited
-      visited = CacheRegistry.checkpoint(visited.unionByName(next))
-      CacheRegistry.release(prevVisited)
-      frontier = next
-      // rename the key per round: the count frames share p0's lineage,
-      // so an acc("probe") === c("probe") join would be ambiguous
-      next.groupBy("probe").agg(count(lit(1)).as(s"n$d"))
-        .withColumnRenamed("probe", s"probe_$d")
-    }
-    val out = counts.zipWithIndex
-      .foldLeft(p0) { case (acc, (c, i)) =>
-        acc.join(c, col("probe") === col(s"probe_${i + 1}"), "left")
-          .drop(s"probe_${i + 1}")
+          .join(seen, Seq("probe", "node"), "left_anti")
+          .select(col("probe"), col("node"), lit(r).as("d")))
       }
-      .select(col("probe").as("node"),
-        coalesce(col("n1"), lit(0L)).as("n1"),
-        coalesce(col("n2"), lit(0L)).as("n2"),
-        coalesce(col("n3"), lit(0L)).as("n3"))
+    }
+    // rename the key: the counts share p0's lineage, so a
+    // col("probe") === counts("probe") join would be ambiguous
+    val counts = state.groupBy(col("probe").as("probe_c"))
+      .agg(count_if(col("d") === 1).as("n1"),
+        count_if(col("d") === 2).as("n2"),
+        count_if(col("d") === 3).as("n3"))
+    val out = p0.join(counts, col("probe") === col("probe_c"))
+      .select(col("probe").as("node"), col("n1"), col("n2"), col("n3"))
       .where(col("n1") > 0)
       .withColumn("harmonic_milli",
         expr("n1 * 1000 + n2 * 500 + n3 * 333"))
       .orderBy("node")
     // pin (not bare cache) so Session.clearAll reclaims it; materialize
-    // before releasing the round frontiers it reads from
+    // before releasing the state it reads from
     val materialized = CacheRegistry.pin(out)
     materialized.count()
-    rounds.foreach(CacheRegistry.release)
-    CacheRegistry.release(visited)
-    CacheRegistry.release(arcs)
+    Seq(init, state, arcs).foreach(CacheRegistry.release)
     materialized
   }
 }

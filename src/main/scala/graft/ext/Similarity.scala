@@ -734,8 +734,9 @@ object Similarity {
     * each round (corpus x 1 work, not corpus x k), so the total cost
     * is k linear passes; each round ships ONE chosen row to the
     * driver and broadcasts it back (k bounded collects, like a
-    * k-means fit). The quantized corpus is pinned once; min-distance
-    * frames are checkpointed with eager release.
+    * k-means fit). The quantized corpus is pinned once; the rounds run
+    * on [[CacheRegistry.iterate]], which checkpoints each min-distance
+    * frame and releases the one it supersedes.
     *
     * Output: (sel_rank, vec_id, dist_x10k) — dist is the pick's
     * distance to the prior set (-1 for the seed). */
@@ -772,40 +773,24 @@ object Similarity {
     require(seedRows.nonEmpty, "kCenterSelect needs a non-empty corpus")
     val seed = seedRows(0)
     var selected = Vector((1, seed.getLong(0), -1L))
-    var mind = CacheRegistry.checkpoint(distTo(seed))
-    var round = 2
-    var exhausted = false
-    while (round <= k && !exhausted) {
-      val pickedRows = mind
+    val init = CacheRegistry.checkpoint(distTo(seed))
+    // round r picks rank r+1; the min-distance frame after the k-th pick
+    // is never read, so that round declines to build it
+    val (last, _) = CacheRegistry.iterate(init, k - 1) { (mind, r) =>
+      val picked = mind
         .where(!col("vec_id").isin(selected.map(_._2): _*))
         .orderBy(col("d").desc, col("vec_id")).limit(1).collect()
-      if (pickedRows.isEmpty) exhausted = true // k > corpus: stop early
-      else {
-        val picked = pickedRows(0)
-        val chosen = base.where(col("vec_id") === picked.getLong(0))
-          .collect()(0)
-        selected :+= ((round, picked.getLong(0), picked.getLong(1)))
-        if (round < k) {
-          val next = CacheRegistry.checkpoint(
-            mind.join(distTo(chosen).withColumnRenamed("d", "dn"), "vec_id")
-              .select(col("vec_id"), least(col("d"), col("dn")).as("d")))
-          CacheRegistry.release(mind)
-          mind = next
-        }
-        round += 1
+        .headOption // None once k > corpus: stop early
+      picked.foreach(p => selected :+= ((r + 1, p.getLong(0), p.getLong(1))))
+      picked.filter(_ => r + 1 < k).map { p =>
+        val chosen = base.where(col("vec_id") === p.getLong(0)).collect()(0)
+        mind.join(distTo(chosen).withColumnRenamed("d", "dn"), "vec_id")
+          .select(col("vec_id"), least(col("d"), col("dn")).as("d"))
       }
     }
-    CacheRegistry.release(mind)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(selected.map(t => Row(t._1, t._2, t._3)), 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("sel_rank",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("dist_x10k",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-      .orderBy("sel_rank")
+    Seq(init, last).foreach(CacheRegistry.release)
+    import spark.implicits._
+    selected.toDF("sel_rank", "vec_id", "dist_x10k").orderBy("sel_rank")
   }
 
   /** Embedding-store quality audit, per label: vector counts, zero

@@ -20,35 +20,37 @@ class ReplHistorySpec extends AnyFunSuite {
 
   test("a restarted reader replays the previous session's history from disk") {
     val dir = java.nio.file.Files.createTempDirectory("graft_hist")
-    val hist = dir.resolve("nested").resolve("lsql_history")
-    // session 1: two lines accepted, each saved incrementally (the
-    // jlineLoop discipline: a killed session keeps everything typed)
-    val t1 = dumbTerm("SELECT 1\n\\t\n")
-    val r1 = Repl.buildReader(t1, hist)
-    assert(r1.readLine("lsql> ").trim == "SELECT 1")
-    r1.getHistory.save()
-    assert(r1.readLine("lsql> ").trim == "\\t")
-    r1.getHistory.save()
-    t1.close()
-    assert(java.nio.file.Files.exists(hist), "history file not written")
-    // session 2: a FRESH reader over the same file sees both lines
-    // WITHOUT any readLine call (eager attach in buildReader)
-    val t2 = dumbTerm("")
-    val r2 = Repl.buildReader(t2, hist)
-    import scala.jdk.CollectionConverters._
-    val lines = r2.getHistory.iterator().asScala.map(_.line()).toSeq
-    assert(lines == Seq("SELECT 1", "\\t"), lines.toString)
-    // and the restarted session's own lines append after the replay
-    val t3 = dumbTerm("SELECT 2\n")
-    val r3 = Repl.buildReader(t3, hist)
-    assert(r3.readLine("lsql> ").trim == "SELECT 2")
-    r3.getHistory.save()
-    t3.close(); t2.close()
-    val t4 = dumbTerm("")
-    val lines4 = Repl.buildReader(t4, hist).getHistory
-      .iterator().asScala.map(_.line()).toSeq
-    assert(lines4 == Seq("SELECT 1", "\\t", "SELECT 2"), lines4.toString)
-    t4.close()
+    try {
+      val hist = dir.resolve("nested").resolve("lsql_history")
+      // session 1: two lines accepted, each saved incrementally (the
+      // jlineLoop discipline: a killed session keeps everything typed)
+      val t1 = dumbTerm("SELECT 1\n\\t\n")
+      val r1 = Repl.buildReader(t1, hist)
+      assert(r1.readLine("lsql> ").trim == "SELECT 1")
+      r1.getHistory.save()
+      assert(r1.readLine("lsql> ").trim == "\\t")
+      r1.getHistory.save()
+      t1.close()
+      assert(java.nio.file.Files.exists(hist), "history file not written")
+      // session 2: a FRESH reader over the same file sees both lines
+      // WITHOUT any readLine call (eager attach in buildReader)
+      val t2 = dumbTerm("")
+      val r2 = Repl.buildReader(t2, hist)
+      import scala.jdk.CollectionConverters._
+      val lines = r2.getHistory.iterator().asScala.map(_.line()).toSeq
+      assert(lines == Seq("SELECT 1", "\\t"), lines.toString)
+      // and the restarted session's own lines append after the replay
+      val t3 = dumbTerm("SELECT 2\n")
+      val r3 = Repl.buildReader(t3, hist)
+      assert(r3.readLine("lsql> ").trim == "SELECT 2")
+      r3.getHistory.save()
+      t3.close(); t2.close()
+      val t4 = dumbTerm("")
+      val lines4 = Repl.buildReader(t4, hist).getHistory
+        .iterator().asScala.map(_.line()).toSeq
+      assert(lines4 == Seq("SELECT 1", "\\t", "SELECT 2"), lines4.toString)
+      t4.close()
+    } finally graft.SparkSpec.deleteTree(dir)
   }
 
   test("history path defaults under ~/.local/share/graft and honors GRAFT_HISTORY") {

@@ -801,6 +801,40 @@ class ExtSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
+  test("checkpointed loops release superseded generations: held RDDs do not grow with the rounds") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    def chain(n: Long) = ((1L to n).toDF("doc_id"),
+      (1L until n).map(i => (i, i + 1)).toDF("d1", "d2"))
+    // (operator, a run of it at a given size); every operator runs more
+    // rounds at the larger size, except harmonic centrality (always 3
+    // rounds), whose state grows instead
+    val ops: Seq[(String, Int => Unit)] = Seq(
+      "clusters" -> { n =>
+        val (d, p) = chain(n.toLong) // n rounds on an n-node chain
+        Dedup.clusters(d, p).collect(); ()
+      },
+      "harmonicCentralityBounded" -> { n =>
+        Graph.harmonicCentralityBounded(chain(n.toLong)._2
+            .select(col("d1").as("src"), col("d2").as("dst")),
+          Seq(1L).toDF("node")).collect(); ()
+      },
+      "learnMerges" -> { k => Bpe.learnMerges(docs, "text", k).collect(); () },
+      "kCenterSelect" -> { k => Similarity.kCenterSelect(emb, k).collect(); () })
+    ops.foreach { case (name, run) =>
+      val held = Seq(2, 6).map { n =>
+        spark.sharedState.cacheManager.clearCache()
+        CacheRegistry.clearAll()
+        run(n)
+        spark.sparkContext.getPersistentRDDs.size
+      }
+      assert(held.distinct.size == 1 && held.head <= 3,
+        s"$name: ${held.mkString(" vs ")} persistent RDDs held after 2 vs 6")
+      CacheRegistry.clearAll()
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty, name)
+    }
+  }
+
   test("bloomCapacity clamps the missing-stats sentinel; bloom dedup still exact on RDD-backed input") {
     import org.apache.spark.sql.types._
     // LogicalRDD plans have no row count and report the defaultSizeInBytes
@@ -1324,6 +1358,45 @@ class ExtSpec extends SparkSpec {
       Graph.personalizedPageRank(e, seeds, 3, 1000000000000L, cap)
     })
     allEqual(paths((e, cap) => Graph.labelPropagation(e, 3, cap)))
+
+    import org.apache.spark.sql.functions.col
+    // harmonic centrality symmetrizes the arcs into the 5-cycle
+    // 0-1-3-4-2-0: every probe has two nodes at each of distances 1, 2
+    val harmonic = Seq(longs -> Seq(0L, 2L, 4L, 9L).toDF("node"),
+      strs -> Seq("v0", "v2", "v4", "v9").toDF("node"))
+      .map { case (e, probes) =>
+        canon(Graph.harmonicCentralityBounded(e, probes)) }
+    allEqual(harmonic)
+    assert(harmonic.head == Seq("v0", "v2", "v4").map(v =>
+      Seq(v, 2L, 2L, 0L, 3000L)))
+
+    // min-label clusters, cold and warm-started: zero-padded string ids
+    // sort like the longs, so the min label and the row order agree
+    def pad(l: Long) = f"n$l%02d"
+    def ids(str: Boolean, ps: Seq[(Long, Long)]) =
+      if (str) ps.map { case (a, b) => (pad(a), pad(b)) }.toDF("d1", "d2")
+      else ps.toDF("d1", "d2")
+    def docIds(str: Boolean) =
+      if (str) (0L to 11L).map(pad).toDF("doc_id")
+      else (0L to 11L).toDF("doc_id")
+    def canonIds(df: DataFrame): Seq[Seq[Any]] =
+      df.collect().toSeq.map(_.toSeq.map {
+        case l: Long => pad(l)
+        case v => v
+      })
+    val ps = Seq(3L -> 2L, 2L -> 1L, 1L -> 0L, 5L -> 6L, 7L -> 9L,
+      9L -> 8L, 11L -> 10L)
+    val clustered = Seq(false, true).flatMap { str =>
+      val (d, p) = (docIds(str), ids(str, ps))
+      val prior = Dedup.clusters(d, ids(str, Seq(3L -> 2L, 5L -> 6L)))
+      val identity = d.select(col("doc_id"), col("doc_id").as("cluster_id"))
+      Seq(Dedup.clusters(d, p), Dedup.clustersWarmStart(d, p, prior)) ++
+        Seq(identity, prior).map(init =>
+          Dedup.propagateMinLabels(p, init, 0L)._1)
+    }.map(canonIds)
+    allEqual(clustered)
+    assert(clustered.head == Seq(0, 0, 0, 0, 4, 5, 5, 7, 7, 7, 10, 10)
+      .zipWithIndex.map { case (c, i) => Seq(pad(i.toLong), pad(c.toLong)) })
   }
 
   test("importance select: top-quartile semantics and target-slice pull") {
